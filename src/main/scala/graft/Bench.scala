@@ -15,21 +15,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Shuffle-writer selection left at the Spark default (200). r21 shipped
-      // 1 (force the sort writer) on within-process A/B evidence, but the
-      // driver's ground-truth bench regressed q03 9x / q02 1.7x under it on
-      // untouched code, while r20's t=200 numbers reproduce on this sandbox
-      // almost exactly — the forced sort writer is a machine-dependent
-      // gamble, not an optimization. Env opt-in kept for A/B probing.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("GRAFT_BYPASS_THRESHOLD", "200"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Graft.session(s"local[$cpus]", cpus)
 
     // noop sink: fully materializes every output column (count() would let
     // Catalyst prune the select list and time a cheaper plan than the query)

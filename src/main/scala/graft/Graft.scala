@@ -2,30 +2,26 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Entry helpers shared by the engine: session construction tuned for the
-  * harness (local[32], 32 shuffle partitions, AQE on) and table access.
+/** Entry helpers shared by the engine: session construction, table access,
+  * and the one materialization policy the iterative operators use.
   *
   * Scale notes (100 TB target): every knob here is also correct on a real
-  * cluster — AQE handles skew/coalescing at runtime, shuffle partitions are
-  * overridden by AQE's coalescing, and broadcast threshold stays default so
-  * dimension tables (region/nation/supplier/part at TPC-H ratios) broadcast.
+  * cluster — AQE (on by default) handles skew/coalescing at runtime, shuffle
+  * partitions are overridden by AQE's coalescing, and broadcast threshold
+  * stays default so dimension tables (region/nation/supplier/part at TPC-H
+  * ratios) broadcast.
   */
 object Graft {
 
-  /** Build a session with graft extensions (SQL function registration). */
-  def session(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession = {
-    val spark = SparkSession
-      .builder()
+  /** The engine's session: `master`, `shufflePartitions` shuffle
+    * partitions, UTC session time zone, UI off, graft functions registered.
+    * Every other conf stays at Spark's default. */
+  def session(master: String, shufflePartitions: Int): SparkSession = {
+    val spark = SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      // shuffle-writer threshold back at the Spark default — the r21 forced
-      // sort writer (=1) regressed q02/q03 in the driver's ground-truth
-      // bench (see Bench.scala)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("GRAFT_BYPASS_THRESHOLD", "200"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -43,14 +39,29 @@ object Graft {
 
   /** Register graft's custom Catalyst expressions as SQL functions on an
     * existing session and set session confs the engine relies on. Idempotent
-    * per session. Call on any externally-built session (e.g. the driver's
-    * Verify/Bench sessions). */
+    * per session. Call on any externally-built session. */
   def registerFunctions(spark: SparkSession): Unit =
     if (configured.putIfAbsent(spark, java.lang.Boolean.TRUE) == null) {
       graft.expr.GraftFunctions.registerAll(spark)
       // events.ts is TIMESTAMP(NANOS) parquet, which Spark 4 rejects by
       // default — read as long nanos (converted in table()).
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    }
+
+  /** Materialize an intermediate that a plan reuses, per the session conf
+    * `graft.materialize`:
+    *  - `localCheckpoint` (default): eager, truncates the logical plan and the
+    *    lineage, so later operators neither recompute nor re-optimize it. The
+    *    blocks are executor-local and not replicated: losing an executor
+    *    fails the job, which is acceptable for short jobs, not for long runs.
+    *  - `none`: returns `df` unchanged, so the full plan stays visible (what
+    *    `graft.Explain` prints). */
+  def materialize(df: DataFrame): DataFrame =
+    df.sparkSession.conf.get("graft.materialize", "localCheckpoint") match {
+      case "localCheckpoint" => df.localCheckpoint()
+      case "none" => df
+      case other => throw new IllegalArgumentException(
+        s"graft.materialize must be localCheckpoint or none, got '$other'")
     }
 
   /** Spread a CPU-heavy per-row stage across all cores when the upstream
@@ -64,7 +75,6 @@ object Graft {
     * (rank with deterministic tie-breaks, min/max/count, per-row kernels).
     */
   def widen(df: DataFrame): DataFrame = {
-    if (df.sparkSession.conf.get("graft.widen.enabled", "true") == "false") return df
     val par = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < par) df.repartition(par) else df
   }

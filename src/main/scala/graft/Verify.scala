@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.sources.ClothingSource
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,24 +8,21 @@ object Verify {
     val Array(sfDir, outDir) = args
     // Oracle SQL for the clothing queries must resolve the same data dir the
     // engine queries will resolve for this run (see ClothingSource.oracleDir).
-    graft.sources.ClothingSource.harnessDirHint = Some(sfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // shuffle-writer threshold at the Spark default (see Bench.scala)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("GRAFT_BYPASS_THRESHOLD", "200"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    ClothingSource.harnessDirHint = Some(sfDir)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Graft.session(s"local[$cpus]", cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        if (graft.queries.ClothingQueries.queries.contains(name)) {
+          val d = ClothingSource.resolveDir(sfDir)
+          System.err.println(s"[verify] $name expects ${ClothingSource.csvPath(d)} and " +
+            s"${ClothingSource.seedPath(d)} (in $sfDir, else GRAFT_CLOTHING_DIR, " +
+            s"default ${ClothingSource.defaultDir})")
+        }
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -15,7 +15,6 @@ object GraftFunctions {
     "modal_label" -> (es => ModalLabel(es.head)),
     "cosine_sim" -> (es => CosineSimilarity(es(0), es(1))),
     "dot_product" -> (es => DotProduct(es(0), es(1))),
-    "minhash_sigs" -> (es => MinHashSignatures(es.head)),
     "minhash_text" -> (es => MinHashFromText(es.head))
   )
 
@@ -33,6 +32,5 @@ object GraftFunctions {
   def modal_label(arr: Column): Column = col(ModalLabel(ex(arr)))
   def cosine_sim(a: Column, b: Column): Column = col(CosineSimilarity(ex(a), ex(b)))
   def dot_product(a: Column, b: Column): Column = col(DotProduct(ex(a), ex(b)))
-  def minhash_sigs(arr: Column): Column = col(MinHashSignatures(ex(arr)))
   def minhash_text(text: Column): Column = col(MinHashFromText(ex(text)))
 }

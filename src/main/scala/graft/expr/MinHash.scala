@@ -3,23 +3,19 @@ package graft.expr
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** MinHash signature kernel (q17). Computes, in ONE pass over a shingle
-  * array, the K affine-permutation minima that DedupQueries previously
-  * assembled from 13 interpreted higher-order functions per row
-  * (`transform(sh, md5->conv)` + 12x `array_min(transform(hs, affine))`),
-  * each of which allocated an intermediate array and evaluated its lambda
-  * per element outside whole-stage codegen.
+/** MinHash signature kernel (q17, `minhash_text`). Computes, in ONE pass over
+  * the raw text's bytes, the K affine-permutation minima over its word
+  * 3-shingles — what the column formulation assembles from a split, a
+  * shingle array and 13 interpreted higher-order functions per row
+  * (`transform(sh, md5->conv)` + 12x `array_min(transform(hs, affine))`).
   *
-  * Bit-for-bit equivalence with the old column expression (and the DuckDB
-  * oracle, which still replays the hex/conv formulation):
+  * Bit-for-bit equivalence with that formulation (which the DuckDB oracle
+  * replays, and DedupQueriesSpec pins):
   *  - `conv(substring(md5(s), 1, 15), 16, 10)::long` == the first 8 digest
   *    bytes as a big-endian long, logically shifted right 4 (15 hex nibbles
   *    = 60 bits), which is non-negative, so `% P` agrees in both engines;
   *  - `A(i) * h + B(i)` with h < P < 2^31 and A(i) < 2^14 stays < 2^45 —
-  *    no 64-bit overflow anywhere;
-  *  - null shingle elements are skipped (array_min semantics); an empty
-  *    input yields a NULL signature array, matching array_min(empty) = NULL
-  *    per slot (concat_ws then skips the nulls identically).
+  *    no 64-bit overflow anywhere.
   */
 object MinHash {
 
@@ -48,27 +44,6 @@ object MinHash {
     override def initialValue(): Array[Byte] = new Array[Byte](16)
   }
 
-  /** 60-bit md5 prefix of the UTF-8 bytes, reduced mod P — identical to
-    * `conv(substring(md5(s), 1, 15), 16, 10)::long % P`. */
-  def hash60(s: UTF8String): Long = {
-    val d = md5.get()
-    d.reset()
-    val n = s.numBytes()
-    var in = inBuf.get()
-    if (in.length < n) {
-      in = new Array[Byte](java.lang.Math.max(n, in.length * 2))
-      inBuf.set(in)
-    }
-    s.writeToMemory(in, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET)
-    d.update(in, 0, n)
-    val digest = outBuf.get()
-    d.digest(digest, 0, 16)
-    var v = 0L
-    var i = 0
-    while (i < 8) { v = (v << 8) | (digest(i) & 0xffL); i += 1 }
-    (v >>> 4) % P
-  }
-
   // Token-start offsets for signaturesFromText (grown geometrically,
   // sticks at the high-water mark like inBuf).
   private val tokBuf = new ThreadLocal[Array[Int]] {
@@ -76,7 +51,7 @@ object MinHash {
   }
 
   /** K minhash slots computed straight from the raw text, equal slot-for-slot
-    * to `signatures(shingles(text))` (DedupQueriesSpec pins the parity):
+    * to the column formulation over `DedupQueries.shingles(text)`:
     *
     *  - `split(text, " ")` (limit -1) tokenizes on single 0x20 bytes and
     *    KEEPS empty tokens, and `concat_ws(" ", slice(toks, i, 3))` re-joins
@@ -150,28 +125,5 @@ object MinHash {
       }
     } else hashRange(0, n)
     new GenericArrayData(sigs)
-  }
-
-  /** K minhash signature slots over a shingle array; null when the array is
-    * empty (array_min-of-empty semantics per slot). */
-  def signatures(arr: ArrayData): ArrayData = {
-    val n = arr.numElements()
-    val sigs = Array.fill(K)(Long.MaxValue)
-    var seen = false
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        seen = true
-        val h = hash60(arr.getUTF8String(i))
-        var k = 0
-        while (k < K) {
-          val v = (A(k) * h + B(k)) % P
-          if (v < sigs(k)) sigs(k) = v
-          k += 1
-        }
-      }
-      i += 1
-    }
-    if (!seen) null else new GenericArrayData(sigs)
   }
 }

@@ -66,33 +66,10 @@ case class ModalLabel(child: Expression)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** MinHash signature vector over a shingle array<string>: K affine minima
-  * in one codegen'd pass (see MinHash for the bit-parity argument vs the
-  * hex/conv column formulation the DuckDB oracle replays). Returns
-  * array<long> of MinHash.K slots, or NULL for an empty/all-null input
-  * (array_min-of-empty semantics per slot). */
-case class MinHashSignatures(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractType] = Seq(Bridge.asAbstract(ArrayType(StringType)))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = true // empty input -> NULL array
-  override def prettyName: String = "minhash_sigs"
-  override protected def nullSafeEval(arr: Any): Any =
-    MinHash.signatures(arr.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"""
-         |${ev.value} = graft.expr.MinHash.signatures($a);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin)
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
 /** MinHash signature vector straight from a raw text: fuses tokenization,
   * word-3-shingling and the K affine minima into one zero-allocation pass
-  * over the string's bytes (see MinHash.signaturesFromText for the parity
-  * argument vs minhash_sigs(shingles(text)), which DedupQueriesSpec pins).
+  * over the string's bytes (see MinHash for the parity argument vs the
+  * hex/conv column formulation, which DedupQueriesSpec pins).
   * Never null for a non-null input — there is always at least one shingle
   * (the whole text when shorter than 3 tokens). */
 case class MinHashFromText(child: Expression)

@@ -54,72 +54,24 @@ object LabelSpreading {
     * vector the k most similar others, ranked on round(sim, 6) desc with
     * ascending-id tie-break. Input: (id, vec) columns.
     *
-    * The per-vector norm is hoisted out of the O(N^2) pair loop:
-    * cosine(a,b) = dot(a,b) / (sqrt(dot(a,a)) * sqrt(dot(b,b))), guarded
-    * exactly like VectorMath.cosineFloat/Double (dim mismatch -> NULL, zero
-    * norm -> 0.0). dot_product shares cosine's accumulation loop and the
-    * combining expression is the kernel's own (sqrt * sqrt, not
-    * sqrt(na*nb)), so round(sim, 6) is bit-identical to cosine_sim while
-    * each pair costs d multiply-adds instead of 3d plus two sqrts. The
-    * streamed side is widened (Graft.widen) so the N^2 stage parallelizes
-    * even off a single-row-group scan; the build side is explicitly
-    * broadcast (size-gated, see below) so the planner can never flip the
-    * sides and serialize the stage again. */
+    * Candidates are every unordered pair (a cross join filtered to
+    * src < dst), verified by `topK`. The streamed side is widened
+    * (Graft.widen) so the N^2 stage parallelizes even off a single-row-group
+    * scan; the build side is explicitly broadcast while its estimated size
+    * fits `spark.sql.autoBroadcastJoinThreshold` (negative: never), so the
+    * planner can never flip the sides and serialize the stage again, and an
+    * oversized vector table is never broadcast (a driver OOM at real N).
+    * Past the threshold the cross join streams both sides; past any
+    * practical N, use knnEdgesApprox — the O(N^2) scorer is the correctness
+    * oracle, not the scale path. */
   def knnEdges(vectors: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
-    val withN2 = vectors.select(col(idCol), col(vecCol),
-      dot_product(col(vecCol), col(vecCol)).as("n2"))
-    val l = graft.Graft.widen(
-      withN2.select(col(idCol).as("src"), col(vecCol).as("vec_src"), col("n2").as("n2_src")))
-    val r0 = withN2.select(col(idCol).as("dst"), col(vecCol).as("vec_dst"), col("n2").as("n2_dst"))
-    // Broadcast the build side only while its ESTIMATED size fits the
-    // broadcast budget (graft.knn.broadcastMaxBytes, default 10 MB — the
-    // Spark autoBroadcastJoinThreshold default): the explicit hint keeps
-    // the planner from flipping the sides and serializing the widened
-    // stage, but an unconditional broadcast of the whole vector table is a
-    // guaranteed driver OOM at real N (guide §3.1/§5). Past the budget the
-    // cross join streams both sides; past ANY practical N, use
-    // knnEdgesApprox below — the O(N^2) scorer is the correctness oracle,
-    // not the scale path.
-    val bcastMax = BigInt(vectors.sparkSession.conf
-      .get("graft.knn.broadcastMaxBytes", (10L << 20).toString))
-    val r = if (r0.queryExecution.optimizedPlan.stats.sizeInBytes <= bcastMax) broadcast(r0)
+    val l = graft.Graft.widen(withNorm(vectors, idCol, vecCol, "src"))
+    val r0 = withNorm(vectors, idCol, vecCol, "dst")
+    val bcastMax = vectors.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val r = if (bcastMax >= 0 && r0.queryExecution.optimizedPlan.stats.sizeInBytes <= bcastMax)
+              broadcast(r0)
             else r0
-    def score(df: DataFrame): DataFrame = df.select(col("src"), col("dst"),
-      round(
-        when(size(col("vec_src")) =!= size(col("vec_dst")), lit(null).cast("double"))
-          .when(col("n2_src") === 0.0 || col("n2_dst") === 0.0, 0.0)
-          .otherwise(
-            dot_product(col("vec_src"), col("vec_dst")) /
-              (sqrt(col("n2_src")) * sqrt(col("n2_dst")))), 6).as("sim"))
-    // Each unordered pair is scored ONCE (src < dst) and mirrored by an
-    // explode — cosine is symmetric bit-for-bit (multiplication commutes
-    // per index; the norm product commutes), so this halves the O(N^2)
-    // kernel evaluations without changing any ranked value. At the
-    // fixture's 64 dims the halving is a measured WASH against scoring all
-    // N^2 directed pairs directly (r22 alternating A/B on the full query:
-    // 1.463 s vs 1.448 s @32c — the mirror's Generate+swap costs what the
-    // halved kernel saves); it is kept as the default because the kernel
-    // cost grows linearly with dimension while the mirror overhead does
-    // not. graft.knn.mirror=false selects the direct form.
-    val pairs =
-      if (vectors.sparkSession.conf.get("graft.knn.mirror", "true") == "true") {
-        val half = score(l.crossJoin(r).filter(col("src") < col("dst")))
-        half
-          .select(col("src"), col("dst"), col("sim"),
-            explode(array(lit(0), lit(1))).as("m"))
-          .select(
-            when(col("m") === 0, col("src")).otherwise(col("dst")).as("src"),
-            when(col("m") === 0, col("dst")).otherwise(col("src")).as("dst"),
-            col("sim"))
-      } else
-        score(l.crossJoin(r).filter(col("src") =!= col("dst")))
-    // row_number + filter <= k: InferWindowGroupLimit inserts a partial
-    // group-limit before the shuffle, so each map partition ships at most k
-    // candidates per src instead of N-1.
-    val w = Window.partitionBy(col("src")).orderBy(desc("sim"), asc("dst"))
-    pairs.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("src"), col("dst"), col("sim"))
+    topK(l.crossJoin(r).filter(col("src") < col("dst")), k)
   }
 
   /** Approximate k-NN edge list via random-hyperplane LSH — the 100 TB
@@ -137,19 +89,27 @@ object LabelSpreading {
     *     (the shuffle carries (table, bucket, id) — never the vectors) and
     *     de-duplicated across tables on the id pair;
     *  3. only candidate pairs re-attach vectors (two equi-joins on id) and
-    *     pay the cosine kernel, then the same mirror + windowed top-k as
-    *     the exact path (identical round/tie-break, so any true neighbor
-    *     that survives bucketing ranks exactly as in `knnEdges`).
+    *     go through the exact path's `topK` (identical round/tie-break, so
+    *     any true neighbor that survives bucketing ranks exactly as in
+    *     `knnEdges`).
     *
     * Cost: O(N * nTables) hashing + O(sum of bucket^2) scoring instead of
     * O(N^2); recall is tunable with nPlanes (bucket granularity) and
     * nTables (number of independent chances to collide). Hyperplanes are
     * seeded and deterministic: same inputs, same edges, every run.
+    *
+    * The hyperplanes take the first vector's dimension, so every vector is
+    * assumed to share it: one of another dimension projects to NULL, lands
+    * in bucket 0 of every table and scores a NULL sim. An empty corpus gives
+    * an empty edge list.
     */
   def knnEdgesApprox(vectors: DataFrame, idCol: String, vecCol: String, k: Int,
                      nPlanes: Int = 6, nTables: Int = 8, seed: Long = 42L): DataFrame = {
-    val spark = vectors.sparkSession
-    val dim = vectors.select(size(col(vecCol)).as("d")).first().getInt(0)
+    val first = vectors.select(size(col(vecCol))).head(1)
+    if (first.isEmpty)
+      return vectors.select(col(idCol).as("src"), col(idCol).as("dst"),
+        lit(null).cast("double").as("sim"))
+    val dim = first.head.getInt(0)
     val rnd = new java.util.Random(seed)
     // float hyperplanes: the embedding columns are array<float>, and
     // dot_product requires matching element types — bucketing only needs
@@ -176,24 +136,46 @@ object LabelSpreading {
       .agg(sort_array(collect_list(col("kid"))).as("ids"))
       .where(size(col("ids")) > 1)
       .select(col("ids"), posexplode(col("ids")))
-      .select(col("col").as("a"),
-        explode(slice(col("ids"), col("pos") + lit(2), size(col("ids")))).as("b"))
+      .select(col("col").as("src"),
+        explode(slice(col("ids"), col("pos") + lit(2), size(col("ids")))).as("dst"))
       .distinct()
-    // 3. re-attach vectors to candidates only; score once per unordered
-    // pair with the exact path's kernel (hoisted norms, same round/guards).
-    val withN2 = vectors.select(col(idCol), col(vecCol),
-      dot_product(col(vecCol), col(vecCol)).as("n2"))
-    val half = candPairs
-      .join(withN2.select(col(idCol).as("a"), col(vecCol).as("vec_a"), col("n2").as("n2_a")), "a")
-      .join(withN2.select(col(idCol).as("b"), col(vecCol).as("vec_b"), col("n2").as("n2_b")), "b")
-      .select(col("a").as("src"), col("b").as("dst"),
-        round(
-          when(size(col("vec_a")) =!= size(col("vec_b")), lit(null).cast("double"))
-            .when(col("n2_a") === 0.0 || col("n2_b") === 0.0, 0.0)
-            .otherwise(
-              dot_product(col("vec_a"), col("vec_b")) /
-                (sqrt(col("n2_a")) * sqrt(col("n2_b")))), 6).as("sim"))
-    val pairs = half
+    // 3. re-attach vectors to candidates only, then the shared verify step.
+    topK(candPairs
+      .join(withNorm(vectors, idCol, vecCol, "src"), "src")
+      .join(withNorm(vectors, idCol, vecCol, "dst"), "dst"), k)
+  }
+
+  /** One end of a candidate pair: (end, vec_end, n2_end) with the squared
+    * norm hoisted out of the pair loop. */
+  private def withNorm(vectors: DataFrame, idCol: String, vecCol: String,
+                       end: String): DataFrame =
+    vectors.select(col(idCol).as(end), col(vecCol).as(s"vec_$end"),
+      dot_product(col(vecCol), col(vecCol)).as(s"n2_$end"))
+
+  /** The verify step both k-NN builders share. `half` holds each unordered
+    * candidate pair once (src < dst) with both ends' `withNorm` columns.
+    *
+    * cosine(a,b) = dot(a,b) / (sqrt(dot(a,a)) * sqrt(dot(b,b))), guarded
+    * exactly like VectorMath.cosineFloat/Double (dim mismatch -> NULL, zero
+    * norm -> 0.0). dot_product shares cosine's accumulation loop and the
+    * combining expression is the kernel's own (sqrt * sqrt, not
+    * sqrt(na*nb)), so round(sim, 6) is bit-identical to cosine_sim while
+    * each pair costs d multiply-adds instead of 3d plus two sqrts.
+    *
+    * Each pair is scored once and mirrored by an explode (column `m`):
+    * cosine is symmetric bit-for-bit, so this halves the kernel evaluations
+    * without changing any ranked value. Then row_number + filter <= k:
+    * InferWindowGroupLimit inserts a partial group-limit before the
+    * shuffle, so each map partition ships at most k candidates per src. */
+  private def topK(half: DataFrame, k: Int): DataFrame = {
+    val scored = half.select(col("src"), col("dst"),
+      round(
+        when(size(col("vec_src")) =!= size(col("vec_dst")), lit(null).cast("double"))
+          .when(col("n2_src") === 0.0 || col("n2_dst") === 0.0, 0.0)
+          .otherwise(
+            dot_product(col("vec_src"), col("vec_dst")) /
+              (sqrt(col("n2_src")) * sqrt(col("n2_dst")))), 6).as("sim"))
+    val pairs = scored
       .select(col("src"), col("dst"), col("sim"),
         explode(array(lit(0), lit(1))).as("m"))
       .select(
@@ -233,28 +215,17 @@ object LabelSpreading {
 
   /** Iterate F <- alpha * S * F + (1 - alpha) * Y for `iters` rounds.
     *
-    * @param sEdges normalized edges (src, dst, s) — every id must appear as
-    *               a src (guaranteed by k-NN construction, k >= 1)
+    * @param sEdges normalized edges (src, dst, s)
     * @param y      clamped seeds (id, y1, y0): 1.0/0.0 one-hot for labelled
     *               rows, 0.0/0.0 for unlabelled; must contain every id that
-    *               appears in sEdges (both invariants are what lets the
-    *               seed term ride the edge table below)
-    * @return (id, f1, f0) raw (unrounded) label distributions
+    *               appears in sEdges (the seed term rides the edge table)
+    * @return (id, f1, f0) raw (unrounded) label distributions, one row per
+    *         id of `y`; an id without edges keeps f = (1 - alpha) * y
     *
-    * Materialization of the loop invariant is configurable via
-    * `graft.spread.materialize`:
-    *  - `localCheckpoint` (default): cheapest — truncates both the logical
-    *    plan (the 5-iteration tree otherwise embeds the O(N^2) k-NN subtree
-    *    5x, costing ~1 s of analyzer/optimizer time per run, r21 event-log
-    *    audit) and the lineage. Failure mode at cluster scale: the blocks
-    *    are executor-local and NOT replicated, so losing one executor makes
-    *    the job unrecoverable mid-iteration — acceptable for a benchmark or
-    *    short job, wrong for a long 100 TB run.
-    *  - `persist`: MEMORY_AND_DISK cache with lineage retained — an
-    *    executor loss recomputes the lost partitions instead of failing the
-    *    job. Costs the full logical plan in the optimizer (mitigated here:
-    *    the iterated tree references the invariant via its cached plan
-    *    fragment) and a count() to populate the cache.
+    * The seeded edge table and the result are materialized with
+    * `Graft.materialize`: under the default localCheckpoint the 5-iteration
+    * plan would otherwise embed the O(N^2) k-NN subtree 5x (~1 s of
+    * analyzer/optimizer time per run, r21 event-log audit).
     */
   def spread(sEdges: DataFrame, y: DataFrame, idCol: String,
              alpha: Double, iters: Int): DataFrame = {
@@ -269,45 +240,38 @@ object LabelSpreading {
     // — the only shuffle per iteration is the groupBy(src). Everything is
     // still computed from parquet on every invocation — the
     // materializations happen inside this call.
-    val e2 = materialize(seededEdges(sEdges, y, idCol))
-    val out = materialize(iterate(e2, y, idCol, alpha, iters))
+    val e2 = graft.Graft.materialize(seededEdges(sEdges, y, idCol))
+    val out = graft.Graft.materialize(iterate(e2, y, idCol, alpha, iters))
     // out is materialized, so the invariant's blocks are dead weight now —
-    // free them eagerly instead of waiting for a GC-driven ContextCleaner
-    // pass (in `persist` mode out's lineage can still recompute e2 if a
-    // partition is lost).
-    e2.unpersist(blocking = false)
+    // free them eagerly instead of waiting for a GC-driven ContextCleaner.
     org.apache.spark.sql.graftbridge.Bridge.dropCheckpointBlocks(e2)
     out
   }
-
-  private def materialize(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get("graft.spread.materialize", "localCheckpoint") match {
-      case "persist" =>
-        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count() // populate the cache so every iteration reads, not rebuilds
-        p
-      case _ => df.localCheckpoint()
-    }
 
   /** Edge invariant with the seed term attached: (src, dst, s, y1, y0)
     * where (y1, y0) are the SOURCE node's clamped seeds. Computed once per
     * spread; carrying the seeds on the edges lets each iteration fold the
     * `(1 - alpha) * Y` term into the message aggregation (y1/y0 are
-    * constant within a src group) instead of a second per-iteration join. */
+    * constant within a src group) instead of a second per-iteration join.
+    * A zero-weight self-loop per id of `y` makes every id a src, so a node
+    * with no edge (e.g. an LSH outlier) still gets its row; the loop adds an
+    * exact 0.0 to every sum, so no other value moves. */
   private def seededEdges(sEdges: DataFrame, y: DataFrame, idCol: String): DataFrame =
     sEdges.join(y, sEdges("src") === y(idCol))
       .select(col("src"), col("dst"), col("s"), col("y1"), col("y0"))
+      .unionByName(y.select(col(idCol).as("src"), col(idCol).as("dst"),
+        lit(0.0).as("s"), col("y1"), col("y0")))
 
   /** One join + one aggregation per iteration:
     * F_k(src) = alpha * sum(s * F_{k-1}(dst)) + (1 - alpha) * Y(src),
     * with Y(src) read back via max(y1)/max(y0) over the src group (constant
     * within the group, so max is exact). The former shape re-joined Y every
     * iteration (`y LEFT JOIN msgs` with coalesce(m, 0)); since every id
-    * appears as a src and F covers every id, every src group exists and the
-    * coalesce was dead — same formula, one broadcast build + one join fewer
-    * per iteration (r22 event-log audit: a warm q12 run was ~25 sequential
-    * sub-0.1 s jobs with ~40 ms driver gaps — job latency, not compute, so
-    * removing jobs is the lever). Per-group sum order still depends on
+    * appears as a src (seededEdges' self-loops) and F covers every id,
+    * every src group exists and the coalesce was dead — same formula, one
+    * broadcast build + one join fewer per iteration (r22 event-log audit: a
+    * warm q12 run was ~25 sequential sub-0.1 s jobs with ~40 ms driver gaps
+    * — job latency, not compute, so removing jobs is the lever). Per-group sum order still depends on
     * partitioning (it always did, under AQE), so agreement with the old
     * shape is to ~1 ulp, which the 6 dp output rounding absorbs — see
     * LabelSpreadingSpec's parity test and the oracle hash. */
@@ -324,14 +288,6 @@ object LabelSpreading {
     }
     f
   }
-
-  /** The pure (un-materialized) plan of the iteration — spread's body
-    * without persist/checkpoint. Exposed so plan audits (graft.Explain) can
-    * print the full physical plan, which spread's eager materialization
-    * otherwise hides behind a Scan ExistingRDD. */
-  def spreadIterPlan(sEdges: DataFrame, y: DataFrame, idCol: String,
-                     alpha: Double, iters: Int): DataFrame =
-    iterate(seededEdges(sEdges, y, idCol), y, idCol, alpha, iters)
 
   /** Threshold the normalized posterior (labelling_pipeline.py:460-466):
     * P(1) >= thresh -> 1, P(0) >= thresh -> 0, else -1 (incl. zero-mass rows

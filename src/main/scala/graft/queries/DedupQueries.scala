@@ -72,17 +72,14 @@ object DedupQueries {
     }),
 
     // MinHash-LSH near-dup candidate generation + exact Jaccard verify.
-    "q17_minhash_neardup" -> ((s, dir) => q17(s, dir, materialize = true))
+    "q17_minhash_neardup" -> q17
   )
 
-  /** `materialize = true` is the real query (the two provably-tiny
-    * intermediates — candidate pairs and candidate docs — are eagerly
-    * localCheckpointed so the expensive MinHash pipeline and the corpus
-    * scan each run exactly ONCE; still fully computed from parquet on every
-    * invocation). `materialize = false` returns the identical logical plan
-    * without checkpoints so graft.Explain can print the full physical plan
-    * (a checkpoint otherwise hides its subtree behind a Scan ExistingRDD). */
-  private[graft] def q17(s: SparkSession, dir: String, materialize: Boolean): DataFrame = {
+  /** The two provably-tiny intermediates — candidate pairs and candidate
+    * docs — go through `Graft.materialize`, so the expensive MinHash
+    * pipeline and the corpus scan each run exactly ONCE (still fully
+    * computed from parquet on every invocation). */
+  private def q17(s: SparkSession, dir: String): DataFrame = {
       val docsText = table(s, dir, "documents")
         .where(col("text").isNotNull)
         .select(col("doc_id"), col("text"))
@@ -98,9 +95,9 @@ object DedupQueries {
       // r21 had replaced 13 interpreted HOFs per row with a kernel over the
       // shingle ARRAY; this removes the interpreted shingle construction
       // (regex split + sequence/transform + per-shingle concat_ws +
-      // array_distinct) too. Identical arithmetic slot-for-slot (unit
-      // parity test), so the DuckDB oracle (hex/conv CTEs over the shingle
-      // formulation) still matches bit-for-bit.
+      // array_distinct) too. Identical arithmetic slot-for-slot to the
+      // hex/conv formulation over `shingles` (unit parity test), which the
+      // DuckDB oracle replays, so the oracle matches bit-for-bit.
       val sig = docsWide.select(col("doc_id"),
         graft.expr.GraftFunctions.minhash_text(col("text")).as("sig"))
       // band keys: r consecutive signature slots joined into one string key
@@ -141,7 +138,7 @@ object DedupQueries {
       // runtime exchange reuse across duplicated subtrees (guide §3.3:
       // materialize an intermediate to truncate the plan). It is tiny by
       // LSH construction (colliding pairs only).
-      val cand = if (materialize) candPlan.localCheckpoint() else candPlan
+      val cand = graft.Graft.materialize(candPlan)
       // exact verify on the (small) candidate set only, in the shape that
       // survives 100 TB (guide §3.1/§8): the corpus is streamed ONCE past a
       // broadcast of the candidate doc_ids (a left-semi join — ids only,
@@ -160,7 +157,7 @@ object DedupQueries {
         .join(broadcast(candIds), Seq("doc_id"), "left_semi")
       // candDocs feeds both the text_a and text_b side; checkpointing it
       // keeps the verify at exactly one corpus pass.
-      val candDocs = if (materialize) candDocsPlan.localCheckpoint() else candDocsPlan
+      val candDocs = graft.Graft.materialize(candDocsPlan)
       val sa = shingles(col("text_a"))
       val sb = shingles(col("text_b"))
       val withA = candDocs

@@ -30,24 +30,18 @@ object GraphQueries {
   private val Thresh = 0.7
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q12_label_propagation" -> ((s, dir) => q12(s, dir, materialize = true))
+    "q12_label_propagation" -> q12
   )
 
-  /** `materialize = true` is the real query (spread persists the edge table
-    * and eagerly checkpoints). `materialize = false` returns the identical
-    * logical plan without persist/checkpoint so graft.Explain can print the
-    * full physical plan (the checkpoint otherwise hides it behind a Scan
-    * ExistingRDD). */
-  private[graft] def q12(s: SparkSession, dir: String, materialize: Boolean): DataFrame = {
+  private def q12(s: SparkSession, dir: String): DataFrame = {
     val e = table(s, dir, "embeddings")
     val edges = LabelSpreading.normalizedEdges(
       LabelSpreading.knnEdges(e, "vec_id", "embedding", K))
     val y = e.select(col("vec_id"),
       when(col("vec_id") % 5 === 0 && col("label") === 0, 1.0).otherwise(0.0).as("y1"),
       when(col("vec_id") % 5 === 0 && col("label") =!= 0, 1.0).otherwise(0.0).as("y0"))
-    val f = if (materialize) LabelSpreading.spread(edges, y, "vec_id", Alpha, Iters)
-            else LabelSpreading.spreadIterPlan(edges, y, "vec_id", Alpha, Iters)
-    LabelSpreading.thresholdLabels(f, "vec_id", Thresh)
+    LabelSpreading.thresholdLabels(
+      LabelSpreading.spread(edges, y, "vec_id", Alpha, Iters), "vec_id", Thresh)
   }
 
   /** The iteration unrolled as CTEs it1..itN, each one

@@ -146,6 +146,32 @@ class LabelSpreadingSpec extends AnyFunSuite {
     }
   }
 
+  test("knnEdgesApprox on an empty corpus returns no edges") {
+    val empty = vectors.where(lit(false))
+    val out = LabelSpreading.knnEdgesApprox(empty, "vec_id", "embedding", 3)
+    assert(out.schema.fieldNames.toSeq == Seq("src", "dst", "sim"))
+    assert(out.collect().isEmpty)
+  }
+
+  test("spread keeps nodes that have no edge") {
+    import spark.implicits._
+    // edges only among 0-3; node 4 (seeded positive) and node 5 (unseeded)
+    // appear in y but in no edge
+    val edges = LabelSpreading.normalizedEdges(
+      Seq((0L, 2L, 1.0), (2L, 0L, 1.0), (1L, 3L, 1.0), (3L, 1L, 1.0)).toDF("src", "dst", "sim"))
+    val y = Seq((0L, 1.0, 0.0), (1L, 0.0, 1.0), (2L, 0.0, 0.0), (3L, 0.0, 0.0),
+      (4L, 1.0, 0.0), (5L, 0.0, 0.0)).toDF("vec_id", "y1", "y0")
+    val alpha = 0.01
+    val out = LabelSpreading.thresholdLabels(
+      LabelSpreading.spread(edges, y, "vec_id", alpha, iters = 5), "vec_id", 0.7)
+      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2), r.getInt(3))).toMap
+    assert(out.keySet == (0L to 5L).toSet)
+    // an isolated node keeps f = (1 - alpha) * y and its thresholded label
+    assert(out(4L) == ((0.99, 0.0, 1)))
+    assert(out(5L) == ((0.0, 0.0, -1)))
+    assert(out(2L)._3 == 1 && out(3L)._3 == 0)
+  }
+
   test("thresholdLabels demotes mixed posteriors to -1") {
     import spark.implicits._
     val f = Seq((1L, 0.6, 0.4), (2L, 0.4, 0.6), (3L, 0.0, 0.0), (4L, 0.71, 0.29))

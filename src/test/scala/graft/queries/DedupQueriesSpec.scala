@@ -1,7 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
@@ -71,42 +73,62 @@ class DedupQueriesSpec extends AnyFunSuite {
     assert(!pairs.keys.exists { case (a, b) => a == 3L || b == 3L || a == 6L || b == 6L })
   }
 
-  test("minhash_sigs kernel is bit-identical to the hex/conv HOF formulation") {
-    import org.apache.spark.sql.functions._
-    val dir = writeFixture()
-    val sh = spark.read.parquet(s"$dir/documents.parquet")
-      .where(col("text").isNotNull)
-      .select(col("doc_id"), DedupQueries.shingles(col("text")).as("sh"))
+  /** (id, text) rows -> id -> minhash_text signature. */
+  private def kernelSigs(df: DataFrame): Map[Long, Seq[Long]] =
+    df.select(col("id"), graft.expr.GraftFunctions.minhash_text(col("t")).as("sig"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+
+  /** (id, text) rows -> id -> signature via the hex/conv HOF formulation the
+    * DuckDB oracle replays: md5 -> 15 hex chars -> base16 -> mod P per
+    * shingle, then 12 affine minima via transform + array_min. */
+  private def hofSigs(df: DataFrame): Map[Long, Seq[Long]] = {
     val P = graft.expr.MinHash.P
     val A = graft.expr.MinHash.A
     val B = graft.expr.MinHash.B
-    // the original column pipeline: md5 -> 15 hex chars -> base16 -> mod P,
-    // then 12 affine minima via transform + array_min
-    val hashed = sh.withColumn("hs", transform(col("sh"), x =>
-      conv(substring(md5(x), 1, 15), 16, 10).cast("long") % P))
-    val viaHofs = A.indices.foldLeft(hashed) { (df, i) =>
-      df.withColumn(s"sig_$i",
-        array_min(transform(col("hs"), h => (lit(A(i)) * h + lit(B(i))) % P)))
-    }.select(col("doc_id") +: A.indices.map(i => col(s"sig_$i")): _*)
+    val hs = transform(DedupQueries.shingles(col("t")), x =>
+      conv(substring(md5(x), 1, 15), 16, 10).cast("long") % P)
+    df.select(col("id"), hs.as("hs"))
+      .select(col("id") +: A.indices.map(i =>
+        array_min(transform(col("hs"), h => (lit(A(i)) * h + lit(B(i))) % P))): _*)
       .collect()
       .map(r => r.getLong(0) -> A.indices.map(i => r.getLong(i + 1)).toSeq)
       .toMap
-    val viaKernel = sh.select(col("doc_id"),
-      graft.expr.GraftFunctions.minhash_sigs(col("sh")).as("sig"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(viaKernel.keySet == viaHofs.keySet)
-    viaKernel.foreach { case (id, sigs) =>
-      assert(sigs == viaHofs(id), s"doc $id signature mismatch")
+  }
+
+  private def textsDf(texts: Seq[String]): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(texts.zipWithIndex.map { case (t, i) => Row(i.toLong, t) }, 2),
+      StructType(Seq(
+        StructField("id", LongType, nullable = false),
+        StructField("t", StringType, nullable = false))))
+
+  /** Non-null texts of the q16/q17 fixture. */
+  private def fixtureTexts(): Seq[String] =
+    spark.read.parquet(s"${writeFixture()}/documents.parquet")
+      .where(col("text").isNotNull).collect().map(_.getString(1)).toSeq
+
+  // `minhash_sigs(shingles(text))` below is the signature of the text's
+  // shingle array: the hex/conv HOF formulation of `hofSigs`, which the
+  // DuckDB oracle replays. The kernel, `MinHash.signaturesFromText`,
+  // computes it from the raw text bytes; `minhash_text` wraps the kernel.
+
+  test("minhash_sigs kernel is bit-identical to the hex/conv HOF formulation") {
+    // the kernel called directly (as perfbench's kernel layer calls it)
+    // on the fixture texts
+    val texts = fixtureTexts()
+    val want = hofSigs(textsDf(texts))
+    for ((t, i) <- texts.zipWithIndex) {
+      val sig = graft.expr.MinHash.signaturesFromText(UTF8String.fromString(t)).toLongArray.toSeq
+      assert(sig == want(i.toLong), s"text '$t' signature mismatch")
     }
   }
 
   test("minhash_text kernel equals minhash_sigs(shingles(text)) slot-for-slot") {
-    import org.apache.spark.sql.functions._
     // adversarial tokenization cases: consecutive/leading/trailing spaces
     // (split keeps empty tokens at limit -1), exactly 2 and 3 tokens, empty
     // string, single char, multi-byte UTF-8 (byte-level 0x20 splitting must
     // equal char-level), repeated shingles (array_distinct vs multiset min),
-    // and a long realistic sentence.
+    // a long realistic sentence, and the q16/q17 fixture's non-null texts.
     val texts = Seq(
       "alpha bravo charlie delta echo",
       "a  b c",            // double space -> empty token inside
@@ -119,25 +141,41 @@ class DedupQueriesSpec extends AnyFunSuite {
       "x",
       "héllo wörld ünïcode ça va bien",  // multi-byte UTF-8
       "dup dup dup dup dup",             // identical shingles repeated
-      "the quick brown fox jumps over the lazy dog again and again")
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(texts.zipWithIndex.map { case (t, i) => Row(i.toLong, t) }),
-      StructType(Seq(
-        StructField("id", LongType, nullable = false),
-        StructField("t", StringType, nullable = false))))
-    val viaArray = df.select(col("id"),
-      graft.expr.GraftFunctions.minhash_sigs(DedupQueries.shingles(col("t"))).as("sig"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val viaText = df.select(col("id"),
-      graft.expr.GraftFunctions.minhash_text(col("t")).as("sig"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(viaText.keySet == viaArray.keySet)
-    for ((id, sigs) <- viaArray)
-      assert(viaText(id) == sigs, s"text '${texts(id.toInt)}' signature mismatch")
+      "the quick brown fox jumps over the lazy dog again and again") ++ fixtureTexts()
+    val df = textsDf(texts)
+    val want = hofSigs(df)
+    val got = kernelSigs(df)
+    assert(got.keySet == want.keySet)
+    for ((id, sigs) <- want)
+      assert(got(id) == sigs, s"text '${texts(id.toInt)}' signature mismatch")
+  }
+
+  test("property: minhash_text equals the HOF reference") {
+    import org.scalacheck.{Gen, Prop, Test}
+    // words, runs of spaces (leading, trailing, doubled) and multi-byte
+    // UTF-8 (2-, 3- and 4-byte sequences), plus empty and all-space texts
+    val atom = Gen.frequency(
+      4 -> Gen.alphaLowerStr.map(_.take(5)),
+      3 -> Gen.const(" "),
+      1 -> Gen.const("   "),
+      2 -> Gen.oneOf("é", "ünï", "ça", "日本", "\uD83D\uDE00"))
+    val text = Gen.frequency(
+      1 -> Gen.const(""),
+      1 -> Gen.chooseNum(1, 4).map(" " * _),
+      8 -> Gen.chooseNum(1, 20).flatMap(n => Gen.listOfN(n, atom)).map(_.mkString))
+    val corpus = Gen.chooseNum(1, 30).flatMap(n => Gen.listOfN(n, text))
+    // one DataFrame per property run: the whole generated corpus at once
+    val prop = Prop.forAllNoShrink(corpus) { texts =>
+      val df = textsDf(texts)
+      val want = hofSigs(df)
+      val bad = kernelSigs(df).collect { case (id, sig) if sig != want(id) => texts(id.toInt) }
+      Prop(bad.isEmpty) :| s"signature mismatch on ${bad.map(t => s"'$t'").mkString(", ")}"
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(30), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
 
   test("shingles: degenerate branches — short, empty") {
-    import org.apache.spark.sql.functions.col
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(
         Row("a b c d"), Row("a b"), Row("solo"), Row(""))),

@@ -5,6 +5,7 @@ sorted by name, rows sorted, values compared).
 
 Usage: python3 tools/check.py <sfDir> <outDir>
 (Verify must have been run first: sbt "runMain graft.Verify <sfDir> <outDir>")
+Every query named in oracle_sql.json must have a dump; a missing one fails.
 """
 import sys, json, glob, os
 import duckdb
@@ -28,6 +29,11 @@ def main(sf_dir, out_dir):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = n_noracle = 0
+    # a declared query without a dump did not run: that is a failure
+    for name in sorted(oracle):
+        if not os.path.isdir(f"{out_dir}/{name}"):
+            print(f"  [FAIL-miss] {name}: no output dump (the query failed to run)")
+            n_fail += 1
     for d in sorted(glob.glob(f"{out_dir}/*/")):
         name = os.path.basename(d.rstrip("/"))
         got = pd.read_parquet(d)

@@ -16,8 +16,13 @@ import duckdb
 
 
 def norm(rows):
+    # floats are keyed at 6 dp, so rows equal within the 1e-9 tolerance of
+    # eq() sort to the same position (+ 0.0 folds -0.0 into 0.0)
+    def cell(x):
+        return str(round(x, 6) + 0.0) if isinstance(x, float) else str(x)
+
     def key(r):
-        return tuple((x is None, str(x)) for x in r)
+        return tuple((x is None, cell(x)) for x in r)
     return sorted([tuple(r) for r in rows], key=key)
 
 
