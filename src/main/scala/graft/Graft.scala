@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
 /** Entry helpers shared by the engine: session construction, table access,
   * and the one materialization policy the iterative operators use.
@@ -79,6 +80,30 @@ object Graft {
     if (df.rdd.getNumPartitions < par) df.repartition(par) else df
   }
 
+  /** LSH candidate generation shared by q17 and `knnEdgesApprox`: the
+    * distinct `(lo, hi)` pairs of `idCol` values, lo < hi, that share the
+    * value of any one of `bucketKeys` (one key per hash table or band).
+    *
+    * One row per (table, bucket, id) goes into the only shuffle — ids, never
+    * the payload — which collects each bucket's sorted id list. Pairs come
+    * from a TWO-LEVEL explode (posexplode the list, then explode each
+    * element's higher partners), so no row ever holds more than a bucket's
+    * O(n) id list: a single explode of the flattened pair array would build
+    * a hot bucket's whole O(n^2) pair array in ONE row, an aggregation-buffer
+    * OOM (guide §2.5/§5). A pair colliding in several tables is kept once. */
+  def bucketPairs(df: DataFrame, idCol: String, bucketKeys: Seq[Column]): DataFrame = {
+    val keyed = bucketKeys.zipWithIndex.map { case (k, t) => struct(lit(t).as("t"), k.as("bkt")) }
+    df.select(col(idCol).as("id"), explode(array(keyed: _*)).as("tb"))
+      .select(col("id"), col("tb.t").as("t"), col("tb.bkt").as("bkt"))
+      .groupBy(col("t"), col("bkt"))
+      .agg(sort_array(collect_list(col("id"))).as("ids"))
+      .where(size(col("ids")) > 1)
+      .select(col("ids"), posexplode(col("ids")))
+      .select(col("col").as("lo"),
+        explode(slice(col("ids"), col("pos") + lit(2), size(col("ids")))).as("hi"))
+      .distinct()
+  }
+
   /** Read one harness table (TESTDATA.md layout: `<dir>/<name>.parquet`).
     * `events.ts` is TIMESTAMP(NANOS) parquet — read as long nanos and
     * floor-convert to microseconds (identical to DuckDB's ns->us handling
@@ -88,8 +113,7 @@ object Graft {
     val df = spark.read.parquet(s"$sfDir/$name.parquet")
     df.schema.fields.foldLeft(df) { (d, f) =>
       if (f.name == "ts" && f.dataType == org.apache.spark.sql.types.LongType)
-        d.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
-          org.apache.spark.sql.functions.floor(org.apache.spark.sql.functions.col("ts") / 1000L).cast("long")))
+        d.withColumn("ts", timestamp_micros(floor(col("ts") / 1000L).cast("long")))
       else d
     }
   }

@@ -1,8 +1,11 @@
 package graft.expr
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.graftbridge.Bridge.AbstractType
 
@@ -13,21 +16,27 @@ import org.apache.spark.sql.graftbridge.Bridge.AbstractType
   * surrounding projections/filters.
   */
 
+/** Shared body of the two string-pair kernels: both arguments strings,
+  * NULL in -> NULL out, codegen a static call to `StringMetrics.<kernel>`.
+  * Serializable so that Java deserialization of a case-class subclass
+  * restores these constructor fields (tasks ship interpreted expressions). */
+abstract class StringPairKernel(val dataType: DataType, kernel: String,
+                                fn: (UTF8String, UTF8String) => Any)
+    extends BinaryExpression with ExpectsInputTypes with Serializable {
+  override def inputTypes: Seq[AbstractType] = Seq.fill(2)(Bridge.asAbstract(StringType))
+  override def nullIntolerant: Boolean = true
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    fn(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.StringMetrics.$kernel($a, $b)")
+}
+
 /** fuzzywuzzy/difflib partial_ratio(left, right): Int 0..100.
   * Reference: /root/reference/src/Label_matching.py:47 dispatch with
   * fuzz.partial_ratio, difflib backend forced at labelling_pipeline.py:131. */
 case class PartialRatio(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractType] = Seq(Bridge.asAbstract(StringType), Bridge.asAbstract(StringType))
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
+    extends StringPairKernel(IntegerType, "partialRatio", StringMetrics.partialRatio) {
   override def prettyName: String = "partial_ratio"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    StringMetrics.partialRatio(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.StringMetrics.partialRatio($a, $b)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -35,17 +44,8 @@ case class PartialRatio(left: Expression, right: Expression)
 /** nltk-style Jaccard distance over character sets (NOT tokens).
   * Reference: /root/reference/src/Label_matching.py:45-46. */
 case class JaccardCharDistance(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractType] = Seq(Bridge.asAbstract(StringType), Bridge.asAbstract(StringType))
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
+    extends StringPairKernel(DoubleType, "jaccardCharDistance", StringMetrics.jaccardCharDistance) {
   override def prettyName: String = "jaccard_char_distance"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    StringMetrics.jaccardCharDistance(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.StringMetrics.jaccardCharDistance($a, $b)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -60,7 +60,7 @@ case class ModalLabel(child: Expression)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "modal_label"
   override protected def nullSafeEval(arr: Any): Any =
-    VectorMath.modalLabel(arr.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+    VectorMath.modalLabel(arr.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, a => s"graft.expr.VectorMath.modalLabel($a)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
@@ -79,47 +79,48 @@ case class MinHashFromText(child: Expression)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "minhash_text"
   override protected def nullSafeEval(s: Any): Any =
-    MinHash.signaturesFromText(s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+    MinHash.signaturesFromText(s.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, a => s"graft.expr.MinHash.signaturesFromText($a)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** Cosine similarity between two dense vectors (array<float> or
-  * array<double>): the kernel for similarity search / embedding dedup /
-  * k-NN graph build (SURVEY §7 scale ops; E7 `print_sim` generalized). */
-case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractType] = Seq(
-    Bridge.typeCollection(ArrayType(FloatType), ArrayType(DoubleType)),
-    Bridge.typeCollection(ArrayType(FloatType), ArrayType(DoubleType)))
+/** Shared body of the two dense-vector kernels: both arguments array<float>
+  * or both array<double> (a mixed pair fails analysis, since the kernel
+  * reads both arrays with one element type), codegen a static call to
+  * `VectorMath.<kernel>Float` or `<kernel>Double`. Serializable: see
+  * StringPairKernel. */
+abstract class VectorPairKernel(kernel: String,
+                                floatFn: (ArrayData, ArrayData) => Double,
+                                doubleFn: (ArrayData, ArrayData) => Double)
+    extends BinaryExpression with ExpectsInputTypes with Serializable {
+  override def inputTypes: Seq[AbstractType] =
+    Seq.fill(2)(Bridge.typeCollection(ArrayType(FloatType), ArrayType(DoubleType)))
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
   // Null on dimension mismatch (never a silent truncated/zero score): a
   // dim bug upstream must surface as NULL, not a plausible number.
   override def nullable: Boolean = true
-  override def prettyName: String = "cosine_sim"
   private def isFloat: Boolean = left.dataType match {
     case ArrayType(FloatType, _) => true
     case _ => false
   }
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+  override def checkInputDataTypes(): TypeCheckResult = {
     val base = super.checkInputDataTypes()
     if (!base.isSuccess) base
     else if (left.dataType.asInstanceOf[ArrayType].elementType !=
              right.dataType.asInstanceOf[ArrayType].elementType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "cosine_sim requires both arrays to share an element type")
+      TypeCheckResult.TypeCheckFailure(s"$prettyName requires both arrays to share an element type")
     else base
   }
   override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val aa = a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val bb = b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    val aa = a.asInstanceOf[ArrayData]
+    val bb = b.asInstanceOf[ArrayData]
     if (aa.numElements() != bb.numElements()) null
-    else if (isFloat) VectorMath.cosineFloat(aa, bb) else VectorMath.cosineDouble(aa, bb)
+    else if (isFloat) floatFn(aa, bb) else doubleFn(aa, bb)
   }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (isFloat) "cosineFloat" else "cosineDouble"
+    val fn = kernel + (if (isFloat) "Float" else "Double")
     nullSafeCodeGen(ctx, ev, (a, b) =>
       s"""
          |if ($a.numElements() != $b.numElements()) {
@@ -129,42 +130,22 @@ case class CosineSimilarity(left: Expression, right: Expression)
          |}
        """.stripMargin)
   }
+}
+
+/** Cosine similarity between two dense vectors: the kernel for similarity
+  * search / embedding dedup / k-NN graph build (SURVEY §7 scale ops; E7
+  * `print_sim` generalized). */
+case class CosineSimilarity(left: Expression, right: Expression)
+    extends VectorPairKernel("cosine", VectorMath.cosineFloat, VectorMath.cosineDouble) {
+  override def prettyName: String = "cosine_sim"
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
 /** Dot product between two dense vectors (IVF/ANN scoring primitive). */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractType] = Seq(
-    Bridge.typeCollection(ArrayType(FloatType), ArrayType(DoubleType)),
-    Bridge.typeCollection(ArrayType(FloatType), ArrayType(DoubleType)))
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  // Null on dimension mismatch — see CosineSimilarity.
-  override def nullable: Boolean = true
+    extends VectorPairKernel("dot", VectorMath.dotFloat, VectorMath.dotDouble) {
   override def prettyName: String = "dot_product"
-  private def isFloat: Boolean = left.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val aa = a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val bb = b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    if (aa.numElements() != bb.numElements()) null
-    else if (isFloat) VectorMath.dotFloat(aa, bb) else VectorMath.dotDouble(aa, bb)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (isFloat) "dotFloat" else "dotDouble"
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = graft.expr.VectorMath.$fn($a, $b);
-         |}
-       """.stripMargin)
-  }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }

@@ -84,10 +84,8 @@ object LabelSpreading {
     *  1. each vector is hashed into `nTables` sign-bit bucket keys (one
     *     codegen'd projection — `nTables * nPlanes` dot products against
     *     CONSTANT hyperplanes, no join);
-    *  2. candidate pairs are generated per (table, bucket) with the same
-    *     groupBy + sorted-id-list + two-level-explode used by q17's LSH
-    *     (the shuffle carries (table, bucket, id) — never the vectors) and
-    *     de-duplicated across tables on the id pair;
+    *  2. `Graft.bucketPairs`, the candidate generator q17's LSH shares,
+    *     emits each (table, bucket)'s id pairs, de-duplicated across tables;
     *  3. only candidate pairs re-attach vectors (two equi-joins on id) and
     *     go through the exact path's `topK` (identical round/tie-break, so
     *     any true neighbor that survives bucketing ranks exactly as in
@@ -121,24 +119,11 @@ object LabelSpreading {
       (0 until nPlanes).map { p =>
         when(dot_product(col(vecCol), typedLit(planes(t)(p))) >= 0, lit(1 << p)).otherwise(lit(0))
       }.reduce(_ + _)
-    // 1. hash: one row per (table, bucket, id) — 3 narrow columns into the
-    // bucket shuffle, never the vector payload (guide §2.3).
-    val keyed = graft.Graft.widen(vectors.select(col(idCol), col(vecCol)))
-      .select(col(idCol).as("kid"),
-        explode(array((0 until nTables).map(t =>
-          struct(lit(t).as("t"), bucketKey(t).as("bkt"))): _*)).as("tb"))
-      .select(col("kid"), col("tb.t").as("t"), col("tb.bkt").as("bkt"))
-    // 2. in-bucket pairs, two-level explode (no O(bucket^2) row ever
-    // materializes — see DedupQueries candidate generation), deduped
-    // across tables.
-    val candPairs = keyed
-      .groupBy(col("t"), col("bkt"))
-      .agg(sort_array(collect_list(col("kid"))).as("ids"))
-      .where(size(col("ids")) > 1)
-      .select(col("ids"), posexplode(col("ids")))
-      .select(col("col").as("src"),
-        explode(slice(col("ids"), col("pos") + lit(2), size(col("ids")))).as("dst"))
-      .distinct()
+    // 1.-2. in-bucket pairs over the nTables sign-bit keys, deduped across
+    // tables; only (table, bucket, id) crosses the shuffle, never the vector.
+    val candPairs = graft.Graft.bucketPairs(
+      graft.Graft.widen(vectors.select(col(idCol), col(vecCol))), idCol,
+      (0 until nTables).map(bucketKey)).toDF("src", "dst")
     // 3. re-attach vectors to candidates only, then the shared verify step.
     topK(candPairs
       .join(withNorm(vectors, idCol, vecCol, "src"), "src")
@@ -265,16 +250,14 @@ object LabelSpreading {
   /** One join + one aggregation per iteration:
     * F_k(src) = alpha * sum(s * F_{k-1}(dst)) + (1 - alpha) * Y(src),
     * with Y(src) read back via max(y1)/max(y0) over the src group (constant
-    * within the group, so max is exact). The former shape re-joined Y every
-    * iteration (`y LEFT JOIN msgs` with coalesce(m, 0)); since every id
-    * appears as a src (seededEdges' self-loops) and F covers every id,
-    * every src group exists and the coalesce was dead — same formula, one
-    * broadcast build + one join fewer per iteration (r22 event-log audit: a
-    * warm q12 run was ~25 sequential sub-0.1 s jobs with ~40 ms driver gaps
-    * — job latency, not compute, so removing jobs is the lever). Per-group sum order still depends on
-    * partitioning (it always did, under AQE), so agreement with the old
-    * shape is to ~1 ulp, which the 6 dp output rounding absorbs — see
-    * LabelSpreadingSpec's parity test and the oracle hash. */
+    * within the group, so max is exact). Every id appears as a src
+    * (seededEdges' self-loops), so every id gets a row without a join back
+    * onto Y (r22 event-log audit: a warm q12 run was ~25 sequential sub-0.1 s
+    * jobs with ~40 ms driver gaps — job latency, not compute, so removing
+    * jobs is the lever). Per-group sum order depends on partitioning (under
+    * AQE), so agreement with the re-join formulation is to ~1 ulp, which the
+    * 6 dp output rounding absorbs — see LabelSpreadingSpec's parity test and
+    * the oracle hash. */
   private def iterate(e2: DataFrame, y: DataFrame, idCol: String,
                       alpha: Double, iters: Int): DataFrame = {
     var f = y.select(col(idCol), col("y1").as("f1"), col("y0").as("f0"))

@@ -30,10 +30,8 @@ import graft.Graft.table
   * rows). q16 still fingerprints nulls (null group counts the copies).
   *
   * Skew note (100 TB): exact-duplicate clusters share all 4 band keys, so a
-  * cluster of n exact copies yields O(n^2) candidate pairs. The pair
-  * generation is a two-level explode, so no single row ever holds more than
-  * the bucket's O(n) id list (the O(n^2) blowup streams through the
-  * generator instead of materializing per row). At production scale run q16
+  * cluster of n exact copies yields O(n^2) candidate pairs (streamed by
+  * `Graft.bucketPairs`, never held in one row). At production scale run q16
   * upstream and near-dup only the exact-dedup keepers — band buckets are
   * then bounded by the NEAR-dup cluster size. The queries are kept
   * independent here so each is separately oracle-checked.
@@ -87,51 +85,26 @@ object DedupQueries {
       // whole shingle+md5+minhash kernel runs in ONE task (no-op at scale,
       // where the scan is already parallel — see Graft.widen). The corpus is
       // scanned exactly twice per invocation: once by the signature pipeline
-      // and once by the candidate semi-join below (was three passes in r21).
+      // and once by the candidate semi-join below.
       val docsWide = graft.Graft.widen(docsText)
       // One codegen'd pass fuses tokenization, word-3-shingling and all K
       // signature slots (MinHashFromText kernel): each shingle is a byte
       // range of the raw text, so the pass allocates nothing per shingle.
-      // r21 had replaced 13 interpreted HOFs per row with a kernel over the
-      // shingle ARRAY; this removes the interpreted shingle construction
-      // (regex split + sequence/transform + per-shingle concat_ws +
-      // array_distinct) too. Identical arithmetic slot-for-slot to the
-      // hex/conv formulation over `shingles` (unit parity test), which the
-      // DuckDB oracle replays, so the oracle matches bit-for-bit.
+      // Identical arithmetic slot-for-slot to the hex/conv formulation over
+      // `shingles` (unit parity test), which the DuckDB oracle replays, so
+      // the oracle matches bit-for-bit.
       val sig = docsWide.select(col("doc_id"),
         graft.expr.GraftFunctions.minhash_text(col("text")).as("sig"))
       // band keys: r consecutive signature slots joined into one string key
-      val bandStructs = (0 until bands).map { j =>
-        val key = concat_ws("_",
-          (0 until rowsPerBand).map(r =>
-            element_at(col("sig"), j * rowsPerBand + r + 1)): _*)
-        struct(lit(j).as("band"), key.as("key"))
+      val bandKeys = (0 until bands).map { j =>
+        concat_ws("_", (0 until rowsPerBand).map(r =>
+          element_at(col("sig"), j * rowsPerBand + r + 1)): _*)
       }
-      val banded = sig
-        .select(col("doc_id"), explode(array(bandStructs: _*)).as("b"))
-        .select(col("doc_id"), col("b.band"), col("b.key"))
       // candidates: bucket once on (band, key) and emit each bucket's
-      // id-ordered pairs. Replaces the banded-vs-banded self-join, which
-      // computed the whole signature subtree TWICE (r21 plan audit:
-      // operators 1-6 duplicated as 7-12) and broadcast the full banded
-      // relation; now the minhash pipeline runs once and the only shuffle
-      // is the (band, key) partial aggregation. Same candidate set: within
-      // one bucket each doc_id appears once, so the sorted-array
-      // combinations are exactly the pairs the self-join emitted. Pair
-      // generation is a TWO-LEVEL explode (posexplode the bucket, then
-      // explode each element's ordered partners): the r21 single explode
-      // of flatten(transform(...)) materialized a bucket's whole O(n^2)
-      // pair array in ONE row — an aggregation-buffer OOM on a hot
-      // (band, key) bucket (guide §2.5/§5); this form never holds more
-      // than the O(n) id list per row, with an identical pair set.
-      val candPlan = banded
-        .groupBy(col("band"), col("key"))
-        .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-        .where(size(col("ids")) > 1)
-        .select(col("ids"), posexplode(col("ids")))
-        .select(col("col").as("doc_a"),
-          explode(slice(col("ids"), col("pos") + lit(2), size(col("ids")))).as("doc_b"))
-        .distinct()
+      // id-ordered pairs; the minhash pipeline runs once and the only
+      // shuffle is the (band, key) partial aggregation. Same pair set as the
+      // oracle's banded self-join: within one bucket each doc_id appears once.
+      val candPlan = graft.Graft.bucketPairs(sig, "doc_id", bandKeys).toDF("doc_a", "doc_b")
       // cand is referenced three times below (pair attach + both ends of
       // the id list); eagerly materializing it guarantees the MinHash
       // pipeline runs exactly once per invocation instead of gambling on
@@ -144,12 +117,10 @@ object DedupQueries {
       // broadcast of the candidate doc_ids (a left-semi join — ids only,
       // never document bodies), and every later join touches only the
       // surviving O(|cand|) rows — so no join below ever broadcasts or
-      // shuffles full documents of more than ~2|cand| rows. The r21 shape
-      // broadcast candidate rows WITH full text bodies (|cand| x doc size,
-      // the r21 ADVICE hazard) and streamed the corpus twice; this one
-      // moves document bodies exactly once (§8: decide with small rows,
-      // move big rows once). Shingles are re-derived on candidate rows
-      // only: O(|cand|), not O(corpus).
+      // shuffles full documents of more than ~2|cand| rows: document bodies
+      // move exactly once (§8: decide with small rows, move big rows once).
+      // Shingles are re-derived on candidate rows only: O(|cand|), not
+      // O(corpus).
       val candIds = cand
         .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
         .distinct()

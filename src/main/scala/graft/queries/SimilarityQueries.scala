@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import scala.jdk.CollectionConverters._
 import graft.Graft.table
 import graft.expr.GraftFunctions.{cosine_sim, dot_product, jaccard_char_distance, modal_label}
 
@@ -156,12 +157,4 @@ object SimilarityQueries {
              ON e.vec_id <> q.vec_id) t
          WHERE rnk <= 10"""
   )
-
-  private implicit class SeqAsJava[A](s: Seq[A]) {
-    def asJava: java.util.List[A] = {
-      val l = new java.util.ArrayList[A](s.size)
-      s.foreach(l.add)
-      l
-    }
-  }
 }

@@ -15,9 +15,7 @@ import org.apache.spark.sql.types._
   *    immediately instead of silently nulling.
   *  - JSON: `json.load(f)` of `data/seed_labels.json` (notebook cell 3 @
   *    line 89) — a {label_id -> [seed phrase, ...]} dict. Re-expressed
-  *    relationally as an exploded (item_id, seed) table; as driver-side
-  *    config via [[seedMap]] (it IS configuration: ≤ a few dozen strings
-  *    that become broadcast literals in the scoring crossJoin).
+  *    relationally as an exploded (item_id, seed) table.
   *
   * Scale notes: the CSV scan is a plain FileScan with the schema pushed
   * down — splittable, parallel, no driver involvement. The JSON is a
@@ -65,7 +63,7 @@ object ClothingSource {
   /** S1: the mock product table. `name` is unique in the shipped data and
     * serves as the stable row key (the reference leans on the pandas row
     * index; a content key is the distributed-safe equivalent). */
-  def clothing(spark: SparkSession, dir: String = dataDir): DataFrame =
+  def clothing(spark: SparkSession, dir: String): DataFrame =
     spark.read
       .schema(schema)
       .option("header", "true")
@@ -74,7 +72,7 @@ object ClothingSource {
       .csv(csvPath(dir))
 
   /** S2 relational view: (item_id, seed), one row per seed phrase. */
-  def seedLabels(spark: SparkSession, dir: String = dataDir): DataFrame = {
+  def seedLabels(spark: SparkSession, dir: String): DataFrame = {
     val raw = spark.read.option("multiLine", "true").json(seedPath(dir))
     // keys are label ids ("0".."7" today) — sort NUMERICALLY so a 10th label
     // doesn't land between 1 and 2, and fail loudly on a non-numeric key
@@ -91,12 +89,4 @@ object ClothingSource {
     raw.select(explode(map(entries: _*)).as(Seq("item_id", "seeds")))
       .select(col("item_id"), explode(col("seeds")).as("seed"))
   }
-
-  /** S2 as config: label_id -> seed phrases, for building broadcast seed
-    * literals (reference: `seed_labels[str(i)]`, notebook cell 18). */
-  def seedMap(spark: SparkSession, dir: String = dataDir): Map[Int, Seq[String]] =
-    seedLabels(spark, dir)
-      .collect()
-      .groupBy(_.getInt(0))
-      .map { case (k, rows) => k -> rows.map(_.getString(1)).toSeq }
 }

@@ -89,6 +89,22 @@ class VectorMathSpec extends AnyFunSuite {
     assert(rows(1).isNullAt(0) && rows(1).isNullAt(1))
   }
 
+  test("expressions: mixed float/double arrays fail analysis, not a misread kernel") {
+    // both kernels read the two arrays with ONE element type; a float x
+    // double pair once reached dotFloat with a double array (3.75, not 5.0)
+    val spark = graft.SparkTestSession.spark
+    import spark.implicits._
+    Seq((Array(1.0f, 2.0f), Array(1.0, 2.0))).toDF("f", "d")
+      .createOrReplaceTempView("vm_mixed")
+    for (fn <- Seq("dot_product", "cosine_sim"); args <- Seq("f, d", "d, f")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(s"SELECT $fn($args) FROM vm_mixed").collect()
+      }
+      assert(e.getMessage.contains(s"$fn requires both arrays to share an element type"),
+        s"$fn($args): ${e.getMessage}")
+    }
+  }
+
   test("expressions: modal_label over array column matches kernel") {
     val spark = graft.SparkTestSession.spark
     import spark.implicits._

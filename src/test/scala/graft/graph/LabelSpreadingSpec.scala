@@ -83,6 +83,43 @@ class LabelSpreadingSpec extends AnyFunSuite {
     assert(!plan.contains("BroadcastNestedLoopJoin"), "approx path must not BNLJ the corpus")
   }
 
+  test("property: knnEdgesApprox edges are exactly scored, at most k per src, no self-edge") {
+    import org.scalacheck.{Gen, Prop, Test}
+    // small-integer coordinates, so exact ties and duplicate vectors occur;
+    // every corpus also holds a zero vector and a copy of its first vector
+    val corpus = for {
+      dim <- Gen.chooseNum(1, 5)
+      n <- Gen.chooseNum(1, 25)
+      vs <- Gen.listOfN(n, Gen.listOfN(dim, Gen.chooseNum(-2, 2).map(_.toFloat)))
+    } yield vs ++ Seq(Seq.fill(dim)(0f), vs.head)
+    val params = for {
+      k <- Gen.chooseNum(1, 4)
+      nPlanes <- Gen.chooseNum(1, 6)
+      nTables <- Gen.chooseNum(1, 4)
+    } yield (k, nPlanes, nTables)
+    val prop = Prop.forAllNoShrink(corpus, params) { case (vs, (k, nPlanes, nTables)) =>
+      val vecs = spark.createDataFrame(
+        spark.sparkContext.parallelize(vs.zipWithIndex.map { case (v, i) => Row(i.toLong * 3, v) }, 3),
+        StructType(Seq(
+          StructField("vec_id", LongType, nullable = false),
+          StructField("embedding", ArrayType(FloatType, containsNull = false)))))
+      // with k = corpus size the exact path scores every ordered pair
+      val exact = LabelSpreading.knnEdges(vecs, "vec_id", "embedding", vs.size)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      val approx = LabelSpreading.knnEdgesApprox(vecs, "vec_id", "embedding", k,
+        nPlanes = nPlanes, nTables = nTables)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      val badSim = approx.filterNot { case (s, d, sim) => exact.get((s, d)).contains(sim) }
+      val overK = approx.groupBy(_._1).collect { case (s, es) if es.size > k => s }
+      val selfEdges = approx.filter(e => e._1 == e._2)
+      Prop(badSim.isEmpty && overK.isEmpty && selfEdges.isEmpty) :|
+        s"k=$k planes=$nPlanes tables=$nTables: sims off exact $badSim, " +
+          s"srcs over k $overK, self-edges $selfEdges"
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(20), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
   test("spread labels seeded clusters, leaves unseeded cluster at -1") {
     val e = vectors
     val edges = LabelSpreading.normalizedEdges(
