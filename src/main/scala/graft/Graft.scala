@@ -26,28 +26,9 @@ object Graft {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    registerFunctions(spark)
+    graft.expr.GraftFunctions.registerAll(spark)
     spark
   }
-
-  // Sessions already configured (functions registered + confs set). Weak keys
-  // so stopped sessions don't leak; guards the per-query registerFunctions
-  // calls from SparkEntry so repeated invocation is a no-op (no
-  // SimpleFunctionRegistry replace-WARN storms in driver logs).
-  private val configured =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  /** Register graft's custom Catalyst expressions as SQL functions on an
-    * existing session and set session confs the engine relies on. Idempotent
-    * per session. Call on any externally-built session. */
-  def registerFunctions(spark: SparkSession): Unit =
-    if (configured.putIfAbsent(spark, java.lang.Boolean.TRUE) == null) {
-      graft.expr.GraftFunctions.registerAll(spark)
-      // events.ts is TIMESTAMP(NANOS) parquet, which Spark 4 rejects by
-      // default — read as long nanos (converted in table()).
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    }
 
   /** Materialize an intermediate that a plan reuses, per the session conf
     * `graft.materialize`:
@@ -105,11 +86,11 @@ object Graft {
   }
 
   /** Read one harness table (TESTDATA.md layout: `<dir>/<name>.parquet`).
-    * `events.ts` is TIMESTAMP(NANOS) parquet — read as long nanos and
-    * floor-convert to microseconds (identical to DuckDB's ns->us handling
-    * for positive epochs). */
+    * `events.ts` is TIMESTAMP(NANOS) parquet, which Spark 4 rejects by
+    * default — read as long nanos and floor-convert to microseconds
+    * (identical to DuckDB's ns->us handling for positive epochs). */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    registerFunctions(spark)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(s"$sfDir/$name.parquet")
     df.schema.fields.foldLeft(df) { (d, f) =>
       if (f.name == "ts" && f.dataType == org.apache.spark.sql.types.LongType)

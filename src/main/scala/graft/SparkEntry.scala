@@ -12,22 +12,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame = {
-    Graft.registerFunctions(spark)
+  def entry(spark: SparkSession): DataFrame =
     queries("q03_star_join_revenue")(spark, "/root/testdata/sf0.001")
-  }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    (graft.queries.RelationalQueries.queries ++
+  /** Every query runs on any session: the kernels are bound through the
+    * Column API, never looked up by SQL name. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    graft.queries.RelationalQueries.queries ++
       graft.queries.SimilarityQueries.queries ++
       graft.queries.GraphQueries.queries ++
       graft.queries.ClothingQueries.queries ++
-      graft.queries.DedupQueries.queries)
-      .map { case (k, fn) =>
-        k -> ((s: SparkSession, dir: String) => { Graft.registerFunctions(s); fn(s, dir) })
-      }
+      graft.queries.DedupQueries.queries
 
-  def oracleSql: Map[String, String] =
+  val oracleSql: Map[String, String] =
     graft.queries.RelationalQueries.oracleSql ++
       graft.queries.SimilarityQueries.oracleSql ++
       graft.queries.GraphQueries.oracleSql ++

@@ -7,9 +7,6 @@ import scala.jdk.CollectionConverters._
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // Oracle SQL for the clothing queries must resolve the same data dir the
-    // engine queries will resolve for this run (see ClothingSource.oracleDir).
-    ClothingSource.harnessDirHint = Some(sfDir)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = Graft.session(s"local[$cpus]", cpus)
     new java.io.File(outDir).mkdirs()
@@ -19,9 +16,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         if (graft.queries.ClothingQueries.queries.contains(name)) {
-          val d = ClothingSource.resolveDir(sfDir)
+          val d = ClothingSource.dataDir
           System.err.println(s"[verify] $name expects ${ClothingSource.csvPath(d)} and " +
-            s"${ClothingSource.seedPath(d)} (in $sfDir, else GRAFT_CLOTHING_DIR, " +
+            s"${ClothingSource.seedPath(d)} (GRAFT_CLOTHING_DIR, " +
             s"default ${ClothingSource.defaultDir})")
         }
       }

@@ -4,9 +4,10 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.Bridge
 
-/** SQL + Column bindings for graft's custom expressions. SQL registration
-  * makes every custom kernel reachable from `spark.sql(...)` so queries stay
-  * declaratively expressible (and the correctness harness can exercise them). */
+/** Column and SQL bindings for graft's custom expressions. The queries use
+  * the Column bindings, so they run on any session. `registerAll` adds the
+  * SQL names, which make the kernels reachable from `spark.sql(...)`; only
+  * `Graft.session` calls it, so sessions graft did not build lack them. */
 object GraftFunctions {
 
   private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(

@@ -96,16 +96,17 @@ object LabelSpreading {
     * nTables (number of independent chances to collide). Hyperplanes are
     * seeded and deterministic: same inputs, same edges, every run.
     *
-    * The hyperplanes take the first vector's dimension, so every vector is
-    * assumed to share it: one of another dimension projects to NULL, lands
-    * in bucket 0 of every table and scores a NULL sim. An empty corpus gives
-    * an empty edge list.
+    * The hyperplanes take the first non-NULL vector's dimension, so every
+    * vector is assumed to share it: a NULL vector or one of another
+    * dimension projects to NULL, lands in bucket 0 of every table and scores
+    * a NULL sim, which ranks last. A corpus with no non-NULL vector gives an
+    * empty edge list.
     */
   def knnEdgesApprox(vectors: DataFrame, idCol: String, vecCol: String, k: Int,
                      nPlanes: Int = 6, nTables: Int = 8, seed: Long = 42L): DataFrame = {
-    val first = vectors.select(size(col(vecCol))).head(1)
+    val first = vectors.where(col(vecCol).isNotNull).select(size(col(vecCol))).head(1)
     if (first.isEmpty)
-      return vectors.select(col(idCol).as("src"), col(idCol).as("dst"),
+      return vectors.limit(0).select(col(idCol).as("src"), col(idCol).as("dst"),
         lit(null).cast("double").as("sim"))
     val dim = first.head.getInt(0)
     val rnd = new java.util.Random(seed)

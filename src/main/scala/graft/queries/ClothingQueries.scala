@@ -16,18 +16,16 @@ import graft.sources.ClothingSource
   */
 object ClothingQueries {
 
-  // Resolved the same way the engine queries resolve their input dir for the
-  // current Verify run (ClothingSource.harnessDirHint is set by Verify.main),
-  // so oracle and engine can never read different files. `oracleSql` below is
-  // a def so this is evaluated at dump time, not object init.
-  private def dir = ClothingSource.oracleDir
+  // Engine and oracle both read ClothingSource.dataDir, never the harness
+  // sf-dir argument (which holds only parquet tables).
+  private def dir = ClothingSource.dataDir
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // A3 prevalence over the real CSV (notebook cell 7 @ line 125). The
     // groupBy key is 9 values — one partial-agg shuffle at any scale.
-    "q13_clothing_prevalence" -> ((s, d) => {
-      ClothingSource.clothing(s, ClothingSource.resolveDir(d))
+    "q13_clothing_prevalence" -> ((s, _) => {
+      ClothingSource.clothing(s, dir)
         .groupBy(col("true_label"))
         .agg(count(lit(1)).as("n"),
           countDistinct(col("name")).as("n_names"),
@@ -36,15 +34,15 @@ object ClothingQueries {
 
     // S2: the seed-label config as a relational (item_id, seed) table with
     // per-item seed counts attached (window over a 92-row config table).
-    "q14_seed_labels" -> ((s, d) => {
-      val seeds = ClothingSource.seedLabels(s, ClothingSource.resolveDir(d))
+    "q14_seed_labels" -> ((s, _) => {
+      val seeds = ClothingSource.seedLabels(s, dir)
       val counts = seeds.groupBy(col("item_id")).agg(count(lit(1)).as("n_seeds"))
       seeds.join(counts, "item_id")
         .select(col("item_id"), col("seed"), col("n_seeds"))
     })
   )
 
-  def oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Map(
     "q13_clothing_prevalence" ->
       s"""SELECT true_label, count(*) AS n,
           count(DISTINCT name) AS n_names,

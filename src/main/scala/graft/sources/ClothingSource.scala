@@ -23,34 +23,13 @@ import org.apache.spark.sql.types._
   */
 object ClothingSource {
 
-  /** Root of the reference's data directory (override for tests). */
+  /** Root of the reference's data directory. */
   val defaultDir = "/root/reference/data"
+  /** Where the clothing CSV and seed JSON live: `GRAFT_CLOTHING_DIR`, else
+    * `defaultDir`. */
   def dataDir: String = sys.env.getOrElse("GRAFT_CLOTHING_DIR", defaultDir)
   def csvPath(dir: String): String = s"$dir/clothing_mock_data.csv"
   def seedPath(dir: String): String = s"$dir/seed_labels.json"
-
-  /** Resolve the harness `dir` argument: use it when it actually contains
-    * BOTH clothing fixtures (a scaled copy must carry the CSV and the seed
-    * JSON — a partial copy falls back instead of breaking the JSON readers),
-    * else fall back to the env/default location. Keeps the clothing queries
-    * (q13+) honest about the harness contract while the clothing files ship
-    * only with the reference checkout. */
-  def resolveDir(dir: String): String = {
-    import java.nio.file.{Files, Paths}
-    if (Files.exists(Paths.get(csvPath(dir))) &&
-        Files.exists(Paths.get(seedPath(dir)))) dir
-    else dataDir
-  }
-
-  /** Harness sf-dir hint, set by Verify.main so `oracleSql` (which has no
-    * dir parameter in the driver contract) resolves the SAME directory the
-    * engine queries read — fixes the engine/oracle path divergence when a
-    * scaled clothing fixture ships in the harness dir. */
-  @volatile var harnessDirHint: Option[String] = None
-
-  /** The directory oracle SQL should read: identical resolution to what the
-    * engine-side queries use for the current Verify run. */
-  def oracleDir: String = harnessDirHint.map(resolveDir).getOrElse(dataDir)
 
   /** Fixed by the reference data's header (SURVEY §1.2). */
   val schema: StructType = StructType(Seq(

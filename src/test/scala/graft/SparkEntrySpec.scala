@@ -5,7 +5,8 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, LogicalRDD}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The driver contract's inventory and the `graft.materialize` policy. */
+/** The query inventory, the sessions it runs on and the
+  * `graft.materialize` policy. */
 class SparkEntrySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -60,6 +61,18 @@ class SparkEntrySpec extends AnyFunSuite {
       for ((n, (a, b)) <- names.zip(byDefault.zip(full)))
         assert(rows(a) == rows(b), s"$n rows differ between policies")
     } finally spark.conf.unset("graft.materialize")
+  }
+
+  test("queries run on a session graft did not build") {
+    // a fresh function registry and SQL conf, so no graft SQL names
+    val foreign = spark.newSession()
+    val dir = writeFixture()
+    for (n <- Seq("q10_seed_label_fuzzy", "q11_cosine_topk", "q12_label_propagation",
+                  "q16_exact_dedup", "q17_minhash_neardup"))
+      assert(rows(SparkEntry.queries(n)(foreign, dir)) == rows(SparkEntry.queries(n)(spark, dir)),
+        s"$n rows differ on a foreign session")
+    assert(spark.catalog.functionExists("dot_product"))
+    assert(!foreign.catalog.functionExists("dot_product"), "queries registered SQL names")
   }
 
   test("materialize rejects an unknown policy") {

@@ -190,6 +190,69 @@ class LabelSpreadingSpec extends AnyFunSuite {
     assert(out.collect().isEmpty)
   }
 
+  test("knnEdges and knnEdgesApprox rank a NULL first vector last") {
+    val schema = StructType(Seq(
+      StructField("vec_id", LongType, nullable = false),
+      StructField("embedding", ArrayType(FloatType, containsNull = false))))
+    val clusters = vectors.where(col("vec_id") < 8).collect().toSeq
+    // one partition, so the NULL row is the first the dimension read sees
+    val withNull = spark.createDataFrame(
+      spark.sparkContext.parallelize(Row(100L, null) +: clusters, 1), schema)
+    val without = spark.createDataFrame(spark.sparkContext.parallelize(clusters, 1), schema)
+    def edges(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+      df.where(col("src") =!= 100L && col("dst") =!= 100L)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val exact = edges(LabelSpreading.knnEdges(without, "vec_id", "embedding", 3))
+    assert(exact.size == 24)
+    assert(edges(LabelSpreading.knnEdges(withNull, "vec_id", "embedding", 3)) == exact)
+    assert(edges(LabelSpreading.knnEdgesApprox(withNull, "vec_id", "embedding", 3)) ==
+      edges(LabelSpreading.knnEdgesApprox(without, "vec_id", "embedding", 3)))
+    val allNull = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(1L, null), Row(2L, null)), 1), schema)
+    assert(LabelSpreading.knnEdgesApprox(allNull, "vec_id", "embedding", 3).collect().isEmpty)
+  }
+
+  test("property: spread equals a dense iteration of F <- alpha*S*F + (1-alpha)*Y") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import spark.implicits._
+    // no f1 + f0 <= 1 bound: symmetric normalization does not bound row
+    // sums of S (a k-leaf star's centre has row sum sqrt(k))
+    val graphs = for {
+      n <- Gen.chooseNum(1, 12)
+      pairs <- Gen.listOf(Gen.zip(Gen.choose(0, n - 1), Gen.choose(0, n - 1)))
+      ys <- Gen.listOfN(n, Gen.oneOf((1.0, 0.0), (0.0, 1.0), (0.0, 0.0)))
+      alpha <- Gen.oneOf(0.01, 0.5, 0.99)
+      iters <- Gen.chooseNum(1, 6)
+    } yield (pairs.filter { case (a, b) => a != b }.distinct, ys, alpha, iters)
+    val prop = Prop.forAllNoShrink(graphs) { case (pairs, ys, alpha, iters) =>
+      val sEdges = LabelSpreading.normalizedEdges(
+        pairs.map { case (a, b) => (a.toLong, b.toLong, 1.0) }.toDF("src", "dst", "sim"))
+      val s = sEdges.collect().map(r => (r.getLong(0).toInt, r.getLong(1).toInt, r.getDouble(2)))
+      val y = ys.zipWithIndex.map { case ((y1, y0), i) => (i.toLong, y1, y0) }.toDF("vec_id", "y1", "y0")
+      val got = LabelSpreading.spread(sEdges, y, "vec_id", alpha, iters)
+        .collect().map(r => (r.getLong(0).toInt, r.getDouble(1), r.getDouble(2))).toSeq
+      var f = ys.toIndexedSeq
+      for (_ <- 1 to iters) {
+        val msg = s.groupBy(_._1).map { case (src, es) =>
+          src -> es.map { case (_, dst, w) => (w * f(dst)._1, w * f(dst)._2) }
+            .foldLeft((0.0, 0.0)) { case ((a, b), (c, d)) => (a + c, b + d) }
+        }
+        f = ys.indices.map { i =>
+          val (m1, m0) = msg.getOrElse(i, (0.0, 0.0))
+          (alpha * m1 + (1 - alpha) * ys(i)._1, alpha * m0 + (1 - alpha) * ys(i)._2)
+        }
+      }
+      val off = got.filterNot { case (i, f1, f0) =>
+        f1 >= 0 && f0 >= 0 && math.abs(f1 - f(i)._1) <= 1e-12 && math.abs(f0 - f(i)._2) <= 1e-12
+      }
+      Prop(got.map(_._1).sorted == ys.indices && off.isEmpty) :|
+        s"n=${ys.size} edges=$pairs alpha=$alpha iters=$iters: ids ${got.map(_._1).sorted}, " +
+          s"off the dense reference $off (want $f)"
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(30), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
   test("spread keeps nodes that have no edge") {
     import spark.implicits._
     // edges only among 0-3; node 4 (seeded positive) and node 5 (unseeded)
