@@ -61,9 +61,9 @@ object Graft {
     if (df.rdd.getNumPartitions < par) df.repartition(par) else df
   }
 
-  /** LSH candidate generation shared by q17 and `knnEdgesApprox`: the
-    * distinct `(lo, hi)` pairs of `idCol` values, lo < hi, that share the
-    * value of any one of `bucketKeys` (one key per hash table or band).
+  /** q17's LSH candidate generation: the distinct `(lo, hi)` pairs of
+    * `idCol` values, lo < hi, that share the value of any one of
+    * `bucketKeys` (one key per hash table or band).
     *
     * One row per (table, bucket, id) goes into the only shuffle — ids, never
     * the payload — which collects each bucket's sorted id list. Pairs come

@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.expr.GraftFunctions.dot_product
 
 /** Label spreading over a k-NN similarity graph — the reference's namesake
@@ -42,54 +43,39 @@ import graft.expr.GraftFunctions.dot_product
   *
   * Scale path (100 TB): the exact k-NN build is the O(N^2) correctness
   * oracle; `knnEdgesApprox` is the LSH-bucketed scale path (same output
-  * schema, no crossJoin / corpus broadcast) — the spread itself is linear
-  * in edges per iteration (one shuffle on dst, one on src). The seeded edge
-  * table is eagerly materialized so the iterated plan reuses one
-  * materialization instead of recomputing the N^2 scan per iteration, and
-  * so the logical plan the optimizer sees stays iteration-sized.
+  * schema, scores only rows that share a bucket) — the spread itself is
+  * linear in edges per iteration (one shuffle on dst, one on src). The
+  * seeded edge table is eagerly materialized so the iterated plan reuses
+  * one materialization instead of recomputing the N^2 scan per iteration,
+  * and so the logical plan the optimizer sees stays iteration-sized.
   */
 object LabelSpreading {
 
   /** Directed k-NN edge list (src, dst, sim) by cosine similarity: for each
     * vector the k most similar others, ranked on round(sim, 6) desc with
-    * ascending-id tie-break. Input: (id, vec) columns.
+    * ascending-id tie-break. Input: (id, vec) columns; the id column must be
+    * byte/short/int/long (the scorer carries ids as long).
     *
-    * Candidates are every unordered pair (a cross join filtered to
-    * src < dst), verified by `topK`. The streamed side is widened
-    * (Graft.widen) so the N^2 stage parallelizes even off a single-row-group
-    * scan; the build side is explicitly broadcast while its estimated size
-    * fits `spark.sql.autoBroadcastJoinThreshold` (negative: never), so the
-    * planner can never flip the sides and serialize the stage again, and an
-    * oversized vector table is never broadcast (a driver OOM at real N).
-    * Past the threshold the cross join streams both sides; past any
-    * practical N, use knnEdgesApprox — the O(N^2) scorer is the correctness
-    * oracle, not the scale path. */
-  def knnEdges(vectors: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
-    val l = graft.Graft.widen(withNorm(vectors, idCol, vecCol, "src"))
-    val r0 = withNorm(vectors, idCol, vecCol, "dst")
-    val bcastMax = vectors.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val r = if (bcastMax >= 0 && r0.queryExecution.optimizedPlan.stats.sizeInBytes <= bcastMax)
-              broadcast(r0)
-            else r0
-    topK(l.crossJoin(r).filter(col("src") < col("dst")), k)
-  }
+    * Every row is a candidate of every other: the whole corpus is ONE group
+    * of `tiledTopK`, so it is collected into one row of O(n * d) and cut
+    * into tiles there — the exact, O(n^2) correctness oracle, not the scale
+    * path (that is knnEdgesApprox). */
+  def knnEdges(vectors: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame =
+    mergeTopK(tiledTopK(vectors, idCol, vecCol, Seq(lit(0)), k), idType(vectors, idCol), k)
 
   /** Approximate k-NN edge list via random-hyperplane LSH — the 100 TB
     * scale path for the graph build (same output schema as `knnEdges`, so
     * `normalizedEdges`/`spread` compose unchanged). `knnEdges` stays the
-    * declared q12 oracle: exact, O(N^2), and only viable while a corpus
-    * fits a broadcast; this path never broadcasts or cross-joins the corpus.
+    * declared q12 oracle.
     *
-    * Shape (guide §8: decide with small rows, move big rows once):
-    *  1. each vector is hashed into `nTables` sign-bit bucket keys (one
-    *     codegen'd projection — `nTables * nPlanes` dot products against
-    *     CONSTANT hyperplanes, no join);
-    *  2. `Graft.bucketPairs`, the candidate generator q17's LSH shares,
-    *     emits each (table, bucket)'s id pairs, de-duplicated across tables;
-    *  3. only candidate pairs re-attach vectors (two equi-joins on id) and
-    *     go through the exact path's `topK` (identical round/tie-break, so
-    *     any true neighbor that survives bucketing ranks exactly as in
-    *     `knnEdges`).
+    * Each vector is hashed into `nTables` sign-bit bucket keys (one
+    * codegen'd projection — `nTables * nPlanes` dot products against
+    * CONSTANT hyperplanes, no join), and each (table, bucket) is a group of
+    * `tiledTopK`: only rows sharing a bucket are scored, with the exact
+    * path's rounding and tie-break, so any true neighbor that survives
+    * bucketing ranks exactly as in `knnEdges`. A pair colliding in several
+    * tables comes back from each, so the candidates are de-duplicated before
+    * the final merge. One bucket is collected into one row of O(n_b * d).
     *
     * Cost: O(N * nTables) hashing + O(sum of bucket^2) scoring instead of
     * O(N^2); recall is tunable with nPlanes (bucket granularity) and
@@ -104,6 +90,7 @@ object LabelSpreading {
     */
   def knnEdgesApprox(vectors: DataFrame, idCol: String, vecCol: String, k: Int,
                      nPlanes: Int = 6, nTables: Int = 8, seed: Long = 42L): DataFrame = {
+    val ids = idType(vectors, idCol)
     val first = vectors.where(col(vecCol).isNotNull).select(size(col(vecCol))).head(1)
     if (first.isEmpty)
       return vectors.limit(0).select(col(idCol).as("src"), col(idCol).as("dst"),
@@ -120,59 +107,140 @@ object LabelSpreading {
       (0 until nPlanes).map { p =>
         when(dot_product(col(vecCol), typedLit(planes(t)(p))) >= 0, lit(1 << p)).otherwise(lit(0))
       }.reduce(_ + _)
-    // 1.-2. in-bucket pairs over the nTables sign-bit keys, deduped across
-    // tables; only (table, bucket, id) crosses the shuffle, never the vector.
-    val candPairs = graft.Graft.bucketPairs(
-      graft.Graft.widen(vectors.select(col(idCol), col(vecCol))), idCol,
-      (0 until nTables).map(bucketKey)).toDF("src", "dst")
-    // 3. re-attach vectors to candidates only, then the shared verify step.
-    topK(candPairs
-      .join(withNorm(vectors, idCol, vecCol, "src"), "src")
-      .join(withNorm(vectors, idCol, vecCol, "dst"), "dst"), k)
+    val groups = (0 until nTables).map(t => struct(lit(t).as("t"), bucketKey(t).as("b")))
+    mergeTopK(tiledTopK(vectors, idCol, vecCol, groups, k).distinct(), ids, k)
   }
 
-  /** One end of a candidate pair: (end, vec_end, n2_end) with the squared
-    * norm hoisted out of the pair loop. */
-  private def withNorm(vectors: DataFrame, idCol: String, vecCol: String,
-                       end: String): DataFrame =
-    vectors.select(col(idCol).as(end), col(vecCol).as(s"vec_$end"),
-      dot_product(col(vecCol), col(vecCol)).as(s"n2_$end"))
+  /** The id column's type, which the scorer carries as a long: an integral
+    * type converts exactly, any other (a string cast to long gives NULL)
+    * is rejected up front. */
+  private def idType(vectors: DataFrame, idCol: String): DataType = {
+    val t = vectors.schema(idCol).dataType
+    if (!Seq(ByteType, ShortType, IntegerType, LongType).contains(t))
+      throw new IllegalArgumentException(
+        s"k-NN id column '$idCol' must be byte/short/int/long, got ${t.simpleString}")
+    t
+  }
 
-  /** The verify step both k-NN builders share. `half` holds each unordered
-    * candidate pair once (src < dst) with both ends' `withNorm` columns.
+  /** Rows per tile side: a tile scores at most TileRows^2 pairs, so a hot
+    * group (the corpus, or a big bucket) spreads over many tasks. */
+  private[graph] val TileRows = 128
+
+  /** The scorer both k-NN builders share: candidates (src, dst, sim), at
+    * most k per source per tile, holding every source's true top k.
     *
-    * cosine(a,b) = dot(a,b) / (sqrt(dot(a,a)) * sqrt(dot(b,b))), guarded
-    * exactly like VectorMath.cosineFloat/Double (dim mismatch -> NULL, zero
-    * norm -> 0.0). dot_product shares cosine's accumulation loop and the
-    * combining expression is the kernel's own (sqrt * sqrt, not
-    * sqrt(na*nb)), so round(sim, 6) is bit-identical to cosine_sim while
-    * each pair costs d multiply-adds instead of 3d plus two sqrts.
+    *  1. rows become (id: long, vec: array<double>) — float to double is
+    *     exact, so every product below is bit-identical to `dot_product`'s —
+    *     keyed by each of `groups` (one key per LSH table; one constant for
+    *     the exact path);
+    *  2. each group is collected once (groups of one row dropped), cut into
+    *     slices of at most `TileRows` rows, and each slice pair (i <= j) becomes
+    *     one tile row, spread over `defaultParallelism` partitions (AQE does
+    *     not coalesce a repartition to an explicit number);
+    *  3. each tile is scored in a tight loop with a k-slot heap per row,
+    *     updating both ends of each pair, and each heap emits its rows.
     *
-    * Each pair is scored once and mirrored by an explode (column `m`):
-    * cosine is symmetric bit-for-bit, so this halves the kernel evaluations
-    * without changing any ranked value. Then row_number + filter <= k:
-    * InferWindowGroupLimit inserts a partial group-limit before the
-    * shuffle, so each map partition ships at most k candidates per src. */
-  private def topK(half: DataFrame, k: Int): DataFrame = {
-    val scored = half.select(col("src"), col("dst"),
-      round(
-        when(size(col("vec_src")) =!= size(col("vec_dst")), lit(null).cast("double"))
-          .when(col("n2_src") === 0.0 || col("n2_dst") === 0.0, 0.0)
-          .otherwise(
-            dot_product(col("vec_src"), col("vec_dst")) /
-              (sqrt(col("n2_src")) * sqrt(col("n2_dst")))), 6).as("sim"))
-    val pairs = scored
-      .select(col("src"), col("dst"), col("sim"),
-        explode(array(lit(0), lit(1))).as("m"))
-      .select(
-        when(col("m") === 0, col("src")).otherwise(col("dst")).as("src"),
-        when(col("m") === 0, col("dst")).otherwise(col("src")).as("dst"),
-        col("sim"))
-    val w = Window.partitionBy(col("src")).orderBy(desc("sim"), asc("dst"))
-    pairs.withColumn("rnk", row_number().over(w))
+    * cosine(a,b) = dot(a,b) / (sqrt(dot(a,a)) * sqrt(dot(b,b))), guarded like
+    * `cosine_sim`: a NULL vector or a dim mismatch scores NULL (even against
+    * a zero-norm vector), else a zero norm scores 0.0; rounded as Spark's
+    * round(x, 6). A group is held in one row of O(n * d). */
+  private def tiledTopK(vectors: DataFrame, idCol: String, vecCol: String,
+                        groups: Seq[Column], k: Int): DataFrame = {
+    val spark = vectors.sparkSession
+    import spark.implicits._
+    vectors.where(col(idCol).isNotNull)
+      .select(struct(col(idCol).cast("long").as("id"), col(vecCol).cast("array<double>").as("vec")).as("v"),
+        explode(array(groups: _*)).as("g"))
+      .groupBy(col("g")).agg(collect_list(col("v")).as("vs"))
+      .where(size(col("vs")) > 1)
+      .select(col("vs")).as[Array[Vec]]
+      .flatMap { vs =>
+        val s = vs.grouped(TileRows).toArray
+        for (i <- s.indices; j <- i until s.length) yield Tile(s(i), if (i == j) Array.empty[Vec] else s(j))
+      }
+      .repartition(spark.sparkContext.defaultParallelism)
+      .flatMap(scoreTile(_, k))
+      .toDF()
+  }
+
+  /** Merge each source's candidates: row_number over (sim desc NULLS LAST,
+    * dst asc) <= k, ids cast back to the input's type. */
+  private def mergeTopK(cands: DataFrame, ids: DataType, k: Int): DataFrame =
+    cands.withColumn("rnk", row_number().over(
+        Window.partitionBy(col("src")).orderBy(desc("sim"), asc("dst"))))
       .filter(col("rnk") <= k)
-      .select(col("src"), col("dst"), col("sim"))
+      .select(col("src").cast(ids), col("dst").cast(ids), col("sim"))
+
+  /** One tile: rows `a` against rows `b`, or `a` against itself when `b`
+    * is empty. Self-pairs (equal ids) are skipped. */
+  private def scoreTile(t: Tile, k: Int): Iterator[Edge] = {
+    val vs = t.a ++ t.b
+    val (na, diag) = (t.a.length, t.b.isEmpty)
+    val norm = vs.map(v => if (v.vec == null) 0.0 else math.sqrt(dot(v.vec, v.vec)))
+    val heaps = Array.fill(vs.length)(new TopK(k))
+    for (p <- 0 until na; q <- (if (diag) p + 1 else na) until vs.length if vs(p).id != vs(q).id) {
+      val (x, y) = (vs(p).vec, vs(q).vec)
+      if (x == null || y == null || x.length != y.length) {
+        heaps(p).offer(vs(q).id, Double.NaN, isNull = true)
+        heaps(q).offer(vs(p).id, Double.NaN, isNull = true)
+      } else {
+        val raw = if (norm(p) == 0.0 || norm(q) == 0.0) 0.0 else dot(x, y) / (norm(p) * norm(q))
+        if (heaps(p).admits(raw) || heaps(q).admits(raw)) {
+          val sim = round6(raw)
+          heaps(p).offer(vs(q).id, sim, isNull = false)
+          heaps(q).offer(vs(p).id, sim, isNull = false)
+        }
+      }
+    }
+    vs.indices.iterator.flatMap(i => heaps(i).edges(vs(i).id))
   }
+
+  /** `dot_product`'s accumulation: sequential, index order, in double. */
+  private def dot(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < a.length) { s += a(i) * b(i); i += 1 }
+    s
+  }
+
+  /** Spark's round(x, 6) on a double: decimal HALF_UP, NaN and +-Inf kept. */
+  private[graph] def round6(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+
+  /** One source's k best candidates, sorted best first in the window's
+    * order: non-NULL sims by `Double.compare` desc (NaN highest, as Spark
+    * orders it), then NULL sims, ties by dst asc. A total order, so the
+    * result does not depend on the order candidates are offered in. */
+  private final class TopK(k: Int) {
+    private val dst = new Array[Long](k)
+    private val sim = new Array[Double](k)
+    private val nul = new Array[Boolean](k)
+    private var n = 0
+    private def before(d: Long, s: Double, isNull: Boolean, i: Int): Boolean =
+      if (isNull != nul(i)) !isNull
+      else {
+        val c = if (isNull) 0 else java.lang.Double.compare(s, sim(i))
+        c > 0 || (c == 0 && d < dst(i))
+      }
+    /** False only when an unrounded score cannot enter: round6 moves a
+      * value by at most 5e-7, so one more than 1e-6 below the kth rounded
+      * sim rounds below it, and its rounding is skipped. */
+    def admits(raw: Double): Boolean = n < k || nul(k - 1) || !(raw + 1e-6 < sim(k - 1))
+    def offer(d: Long, s: Double, isNull: Boolean): Unit =
+      if (n < k || before(d, s, isNull, k - 1)) {
+        var i = if (n < k) { n += 1; n - 1 } else k - 1
+        while (i > 0 && before(d, s, isNull, i - 1)) {
+          dst(i) = dst(i - 1); sim(i) = sim(i - 1); nul(i) = nul(i - 1); i -= 1
+        }
+        dst(i) = d; sim(i) = s; nul(i) = isNull
+      }
+    def edges(src: Long): Iterator[Edge] =
+      (0 until n).iterator.map(i => Edge(src, dst(i), if (nul(i)) None else Some(sim(i))))
+  }
+
+  private[graph] case class Vec(id: Long, vec: Array[Double])
+  private[graph] case class Tile(a: Array[Vec], b: Array[Vec])
+  private[graph] case class Edge(src: Long, dst: Long, sim: Option[Double])
 
   /** Symmetrize + degree-normalize a directed edge list into
     * S = D^{-1/2} W D^{-1/2} with W = 0.5 * (A + A^T): (src, dst, s).

@@ -6,8 +6,8 @@ import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `Graft.bucketPairs`, the LSH candidate generator behind q17 and
-  * `knnEdgesApprox`, against a brute-force pair enumeration. */
+/** `Graft.bucketPairs`, q17's LSH candidate generator, against a
+  * brute-force pair enumeration. */
 class GraftSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 

@@ -120,6 +120,134 @@ class LabelSpreadingSpec extends AnyFunSuite {
     assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
 
+  private val vecSchema = StructType(Seq(
+    StructField("vec_id", LongType, nullable = false),
+    StructField("embedding", ArrayType(FloatType, containsNull = false))))
+
+  private def edgeSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Option[Double])] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1),
+      if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSet
+
+  /** Plain-Scala k-NN over (id, vec): cosine like cosine_sim (NULL vector or
+    * dim mismatch -> NULL, zero norm -> 0.0) rounded through Scala's
+    * BigDecimal, ranked sim desc with NULLs last, then dst asc. */
+  private def bruteKnn(vs: Seq[(Long, Seq[Float])], k: Int): Set[(Long, Long, Option[Double])] = {
+    def cos(a: Seq[Float], b: Seq[Float]): Option[Double] =
+      if (a == null || b == null || a.size != b.size) None
+      else {
+        val (x, y) = (a.map(_.toDouble), b.map(_.toDouble))
+        val dot = x.zip(y).foldLeft(0.0) { case (s, (p, q)) => s + p * q }
+        val (na, nb) = (x.foldLeft(0.0)((s, p) => s + p * p), y.foldLeft(0.0)((s, q) => s + q * q))
+        val c = if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
+        Some(BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      }
+    vs.flatMap { case (src, a) =>
+      vs.collect { case (dst, b) if dst != src => (src, dst, cos(a, b)) }
+        .sortBy { case (_, dst, sim) => (sim.isEmpty, -sim.getOrElse(0.0), dst) }
+        .take(k)
+    }.toSet
+  }
+
+  test("property: knnEdges equals a brute force on corpora that span several tiles") {
+    import org.scalacheck.{Gen, Prop, Test}
+    val t = LabelSpreading.TileRows
+    // small-integer coordinates, so exact ties and duplicate vectors occur;
+    // every corpus also holds a zero vector, a NULL vector and one vector of
+    // another dimension; ids are distinct but not in row order
+    val corpus = for {
+      dim <- Gen.chooseNum(2, 4)
+      n <- Gen.oneOf(Gen.chooseNum(1, 3 * t + 5), Gen.chooseNum(t, 3 * t + 5))
+      vs <- Gen.listOfN(n, Gen.listOfN(dim, Gen.chooseNum(-2, 2).map(_.toFloat)))
+      k <- Gen.oneOf(1, 6, n + 3)
+    } yield (vs ++ Seq(Seq.fill(dim)(0f), null, Seq.fill(dim + 1)(1f)), k)
+    val prop = Prop.forAllNoShrink(corpus) { case (vs, k) =>
+      val rows = vs.zipWithIndex.map { case (v, i) => ((i * 7919L) % 10007, v) }
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.map { case (id, v) => Row(id, v) }, 3), vecSchema)
+      val got = LabelSpreading.knnEdges(df, "vec_id", "embedding", k)
+        .collect().map(r => (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) None else Some(r.getDouble(2))))
+      val want = bruteKnn(rows, k)
+      val overK = got.groupBy(_._1).collect { case (s, es) if es.length > k => s }
+      Prop(got.toSet == want && got.length == want.size && overK.isEmpty) :|
+        s"n=${vs.size} k=$k: missing ${(want -- got).take(5)}, extra ${(got.toSet -- want).take(5)}, " +
+          s"srcs over k $overK"
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(12), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
+  test("round6 equals Spark's round(x, 6), interpreted and codegen'd") {
+    import org.scalacheck.Gen
+    import spark.implicits._
+    val special = Seq(0.1234565, -0.0000005, 0.9999995, Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity, -0.0, 0.0, 1.0, -1.0, 5e-7, -5e-7, 4.9999999e-7, 1e300,
+      Double.MinPositiveValue)
+    val gen = Gen.oneOf(
+      Gen.choose(-1.0, 1.0),
+      Gen.choose(-10000000L, 10000000L).map(n => (n * 10 + 5) / 1e7), // decimal half-way points
+      Gen.choose(-1e9, 1e9),
+      org.scalacheck.Arbitrary.arbitrary[Double])
+    val xs = special ++ Seq.fill(4000)(gen.sample).flatten
+    // a local relation folds round() through the interpreted path; a
+    // parallelized one runs the generated code
+    val local = xs.toDF("x").select(round(col("x"), 6)).collect().map(_.getDouble(0))
+    val codegen = spark.createDataset(spark.sparkContext.parallelize(xs, 4)).toDF("x")
+      .select(round(col("x"), 6)).collect().map(_.getDouble(0))
+    val lits = spark.range(1).select(special.map(x => round(lit(x), 6)): _*)
+      .head().toSeq.map(_.asInstanceOf[Double])
+    def same(a: Double, b: Double) = java.lang.Double.compare(a, b) == 0
+    for ((x, i) <- xs.zipWithIndex) {
+      val r = LabelSpreading.round6(x)
+      assert(same(r, local(i)), s"round6($x) = $r, local ${local(i)}")
+      assert(same(r, codegen(i)), s"round6($x) = $r, codegen ${codegen(i)}")
+    }
+    for ((x, r) <- special.zip(lits)) assert(same(LabelSpreading.round6(x), r), s"round6($x) vs lit $r")
+  }
+
+  test("every k-NN sim equals round(cosine_sim(vec_src, vec_dst), 6)") {
+    import graft.expr.GraftFunctions.cosine_sim
+    val v = vectors
+    for (edges <- Seq(LabelSpreading.knnEdges(v, "vec_id", "embedding", 11),
+                      LabelSpreading.knnEdgesApprox(v, "vec_id", "embedding", 11))) {
+      val off = edges
+        .join(v.select(col("vec_id").as("src"), col("embedding").as("a")), "src")
+        .join(v.select(col("vec_id").as("dst"), col("embedding").as("b")), "dst")
+        .where(not(col("sim") <=> round(cosine_sim(col("a"), col("b")), 6)))
+      assert(edges.count() > 0 && off.isEmpty, off.collect().mkString(", "))
+    }
+  }
+
+  test("a hot bucket larger than a tile: approx equals exact, copies link to the smallest copy ids") {
+    val k = 3
+    val copies = (1000 until 2000).map(id => Row(id.toLong, Seq(0.3f, 0.5f, 0.7f)))
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(vectors.collect().toSeq ++ copies, 4), vecSchema)
+    assert(copies.size > LabelSpreading.TileRows)
+    val exact = edgeSet(LabelSpreading.knnEdges(df, "vec_id", "embedding", k))
+    val approx = LabelSpreading.knnEdgesApprox(df, "vec_id", "embedding", k)
+    assert(edgeSet(approx) == exact)
+    assert(approx.count() == exact.size)
+    for (c <- 1000L until 2000L) {
+      val want = (1000L until 2000L).filter(_ != c).take(k).map(d => (c, d, Some(1.0))).toSet
+      assert(exact.filter(_._1 == c) == want, s"copy $c")
+    }
+  }
+
+  test("k-NN builders reject a non-integral id column and keep an int one") {
+    val strIds = vectors.withColumn("vec_id", col("vec_id").cast("string"))
+    for (build <- Seq[org.apache.spark.sql.DataFrame => Any](
+           LabelSpreading.knnEdges(_, "vec_id", "embedding", 3),
+           LabelSpreading.knnEdgesApprox(_, "vec_id", "embedding", 3))) {
+      val e = intercept[IllegalArgumentException](build(strIds))
+      assert(e.getMessage.contains("vec_id"))
+    }
+    val intIds = LabelSpreading.knnEdges(vectors.withColumn("vec_id", col("vec_id").cast("int")),
+      "vec_id", "embedding", 3)
+    assert(intIds.schema("src").dataType == IntegerType && intIds.schema("dst").dataType == IntegerType)
+    assert(edgeSet(intIds.select(col("src").cast("long"), col("dst").cast("long"), col("sim"))) ==
+      edgeSet(LabelSpreading.knnEdges(vectors, "vec_id", "embedding", 3)))
+  }
+
   test("spread labels seeded clusters, leaves unseeded cluster at -1") {
     val e = vectors
     val edges = LabelSpreading.normalizedEdges(
