@@ -1,10 +1,9 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.expr.GraftFunctions.dot_product
 
 /** Label spreading over a k-NN similarity graph — the reference's namesake
   * algorithm (G1), re-expressed as declarative DataFrame joins.
@@ -54,37 +53,39 @@ object LabelSpreading {
   /** Directed k-NN edge list (src, dst, sim) by cosine similarity: for each
     * vector the k most similar others, ranked on round(sim, 6) desc with
     * ascending-id tie-break. Input: (id, vec) columns; the id column must be
-    * byte/short/int/long (the scorer carries ids as long).
+    * byte/short/int/long (the scorer carries ids as long), the vector column
+    * array<float> or array<double>.
     *
     * Every row is a candidate of every other: the whole corpus is ONE group
-    * of `tiledTopK`, so it is collected into one row of O(n * d) and cut
-    * into tiles there — the exact, O(n^2) correctness oracle, not the scale
-    * path (that is knnEdgesApprox). */
+    * of `tiledTopK`, held in one task's memory and cut into tiles there —
+    * the exact, O(n^2) correctness oracle, not the scale path (that is
+    * knnEdgesApprox). */
   def knnEdges(vectors: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame =
-    mergeTopK(tiledTopK(vectors, idCol, vecCol, Seq(lit(0)), k), idType(vectors, idCol), k)
+    mergeTopK(tiledTopK(vectors, idCol, vecCol, _ => Iterator.single(0L), k), idType(vectors, idCol), k)
 
   /** Approximate k-NN edge list via random-hyperplane LSH — the 100 TB
     * scale path for the graph build (same output schema as `knnEdges`, so
     * `normalizedEdges`/`spread` compose unchanged). `knnEdges` stays the
-    * declared q12 oracle.
+    * declared q12 oracle. The vector column may be array<float> or
+    * array<double>.
     *
-    * Each vector is hashed into `nTables` sign-bit bucket keys (one
-    * codegen'd projection — `nTables * nPlanes` dot products against
+    * `tiledTopK`'s typed step hashes each vector into `nTables` sign-bit
+    * bucket keys (`bucketKeys`: `nPlanes` dot products per table against
     * CONSTANT hyperplanes, no join), and each (table, bucket) is a group of
     * `tiledTopK`: only rows sharing a bucket are scored, with the exact
     * path's rounding and tie-break, so any true neighbor that survives
     * bucketing ranks exactly as in `knnEdges`. A pair colliding in several
     * tables comes back from each, so the candidates are de-duplicated before
-    * the final merge. One bucket is collected into one row of O(n_b * d).
+    * the final merge. One bucket is held in one task's memory.
     *
-    * Cost: O(N * nTables) hashing + O(sum of bucket^2) scoring instead of
-    * O(N^2); recall is tunable with nPlanes (bucket granularity) and
-    * nTables (number of independent chances to collide). Hyperplanes are
-    * seeded and deterministic: same inputs, same edges, every run.
+    * Cost: O(N * nTables * nPlanes * d) hashing + O(sum of bucket^2) scoring
+    * instead of O(N^2); recall is tunable with nPlanes (bucket granularity)
+    * and nTables (number of independent chances to collide). Hyperplanes
+    * are seeded and deterministic: same inputs, same edges, every run.
     *
     * The hyperplanes take the first non-NULL vector's dimension, so every
     * vector is assumed to share it: a NULL vector or one of another
-    * dimension projects to NULL, lands in bucket 0 of every table and scores
+    * dimension sets no bit, lands in bucket 0 of every table and scores
     * a NULL sim, which ranks last. A corpus with no non-NULL vector gives an
     * empty edge list.
     */
@@ -95,21 +96,25 @@ object LabelSpreading {
     if (first.isEmpty)
       return vectors.limit(0).select(col(idCol).as("src"), col(idCol).as("dst"),
         lit(null).cast("double").as("sim"))
-    val dim = first.head.getInt(0)
     val rnd = new java.util.Random(seed)
-    // float hyperplanes: the embedding columns are array<float>, and
-    // dot_product requires matching element types — bucketing only needs
-    // the SIGN of the projection, so float precision is irrelevant here.
-    val planes: IndexedSeq[IndexedSeq[Array[Float]]] =
-      (0 until nTables).map(_ => (0 until nPlanes).map(_ =>
-        Array.fill(dim)(rnd.nextGaussian().toFloat)))
-    def bucketKey(t: Int): Column =
-      (0 until nPlanes).map { p =>
-        when(dot_product(col(vecCol), typedLit(planes(t)(p))) >= 0, lit(1 << p)).otherwise(lit(0))
-      }.reduce(_ + _)
-    val groups = (0 until nTables).map(t => struct(lit(t).as("t"), bucketKey(t).as("b")))
-    mergeTopK(tiledTopK(vectors, idCol, vecCol, groups, k).distinct(), ids, k)
+    // float-valued planes, drawn table by table, then plane by plane: a float
+    // vector's keys are the signs of `VectorMath.dotFloat` against them
+    val planes = Array.fill(nTables, nPlanes, first.head.getInt(0))(rnd.nextGaussian().toFloat.toDouble)
+    mergeTopK(tiledTopK(vectors, idCol, vecCol, bucketKeys(planes), k).distinct(), ids, k)
   }
+
+  /** The LSH bucket key of `vec` in each table t: bit p is set when
+    * `dot(vec, planes(t)(p)) >= 0` as Spark compares doubles (NaN is
+    * highest, -0.0 equals 0.0), packed as `(t << nPlanes) | bits` so keys of
+    * different tables differ. A NULL vector or one of another dimension
+    * sets no bit. */
+  private[graph] def bucketKeys(planes: Array[Array[Array[Double]]])(vec: Array[Double]): Iterator[Long] =
+    planes.iterator.zipWithIndex.map { case (table, t) =>
+      var bits = 0L
+      for (p <- table.indices if vec != null && vec.length == table(p).length && !(dot(vec, table(p)) < 0.0))
+        bits |= 1L << p
+      (t.toLong << table.length) | bits
+    }
 
   /** The id column's type, which the scorer carries as a long: an integral
     * type converts exactly, any other (a string cast to long gives NULL)
@@ -129,34 +134,34 @@ object LabelSpreading {
   /** The scorer both k-NN builders share: candidates (src, dst, sim), at
     * most k per source per tile, holding every source's true top k.
     *
-    *  1. rows become (id: long, vec: array<double>) — float to double is
-    *     exact, so every product below is bit-identical to `dot_product`'s —
-    *     keyed by each of `groups` (one key per LSH table; one constant for
-    *     the exact path);
-    *  2. each group is collected once (groups of one row dropped), cut into
-    *     slices of at most `TileRows` rows, and each slice pair (i <= j) becomes
-    *     one tile row, spread over `defaultParallelism` partitions (AQE does
-    *     not coalesce a repartition to an explicit number);
+    *  1. rows become typed (id: long, vec: array<double>) — float to double
+    *     is exact, so every product below is bit-identical to
+    *     `VectorMath.dotFloat`'s — and each is emitted once per key of
+    *     `keys(vec)` (one per LSH table; one constant for the exact path);
+    *  2. each group is gathered in one task (groups of one row dropped), cut
+    *     into slices of at most `TileRows` rows, and each slice pair (i <= j)
+    *     becomes one tile row, spread over `defaultParallelism` partitions
+    *     (AQE does not coalesce a repartition to an explicit number);
     *  3. each tile is scored in a tight loop with a k-slot heap per row,
     *     updating both ends of each pair, and each heap emits its rows.
     *
     * cosine(a,b) = dot(a,b) / (sqrt(dot(a,a)) * sqrt(dot(b,b))), guarded like
     * `cosine_sim`: a NULL vector or a dim mismatch scores NULL (even against
     * a zero-norm vector), else a zero norm scores 0.0; rounded as Spark's
-    * round(x, 6). A group is held in one row of O(n * d). */
+    * round(x, 6). A group is held in one task's memory, O(n * d). */
   private def tiledTopK(vectors: DataFrame, idCol: String, vecCol: String,
-                        groups: Seq[Column], k: Int): DataFrame = {
+                        keys: Array[Double] => Iterator[Long], k: Int): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
     vectors.where(col(idCol).isNotNull)
-      .select(struct(col(idCol).cast("long").as("id"), col(vecCol).cast("array<double>").as("vec")).as("v"),
-        explode(array(groups: _*)).as("g"))
-      .groupBy(col("g")).agg(collect_list(col("v")).as("vs"))
-      .where(size(col("vs")) > 1)
-      .select(col("vs")).as[Array[Vec]]
-      .flatMap { vs =>
-        val s = vs.grouped(TileRows).toArray
-        for (i <- s.indices; j <- i until s.length) yield Tile(s(i), if (i == j) Array.empty[Vec] else s(j))
+      .select(col(idCol).cast("long").as("id"), col(vecCol).cast("array<double>").as("vec")).as[Vec]
+      .flatMap(v => keys(v.vec).map(_ -> v))
+      .groupByKey(_._1)
+      .flatMapGroups { (_, kvs) =>
+        val s = kvs.map(_._2).toArray.grouped(TileRows).toArray
+        if (s.head.length < 2) Iterator.empty
+        else for (i <- s.indices.iterator; j <- (i until s.length).iterator)
+          yield Tile(s(i), if (i == j) Array.empty[Vec] else s(j))
       }
       .repartition(spark.sparkContext.defaultParallelism)
       .flatMap(scoreTile(_, k))
@@ -195,7 +200,7 @@ object LabelSpreading {
     vs.indices.iterator.flatMap(i => heaps(i).edges(vs(i).id))
   }
 
-  /** `dot_product`'s accumulation: sequential, index order, in double. */
+  /** `VectorMath.dotFloat`'s accumulation: sequential, index order, in double. */
   private def dot(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0; var i = 0
     while (i < a.length) { s += a(i) * b(i); i += 1 }

@@ -46,12 +46,60 @@ class LabelSpreadingSpec extends AnyFunSuite {
   test("knnEdgesApprox matches exact edges on the cluster fixture") {
     val exact = LabelSpreading.knnEdges(vectors, "vec_id", "embedding", 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val approx = LabelSpreading.knnEdgesApprox(vectors, "vec_id", "embedding", 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    // near-identical within-cluster vectors share every LSH bucket, so the
-    // candidate set contains all true neighbors and the identical
-    // round/tie-break ranking reproduces the exact edge set bit-for-bit
-    assert(approx == exact)
+    // the same fixture as array<double>: both builders accept it, and the
+    // widened floats hash and score exactly as the float column does
+    val doubles = vectors.withColumn("embedding", col("embedding").cast("array<double>"))
+    for (v <- Seq(vectors, doubles)) {
+      val approx = LabelSpreading.knnEdgesApprox(v, "vec_id", "embedding", 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      // near-identical within-cluster vectors share every LSH bucket, so the
+      // candidate set contains all true neighbors and the identical
+      // round/tie-break ranking reproduces the exact edge set bit-for-bit
+      assert(approx == exact, v.schema("embedding").dataType.simpleString)
+    }
+    assert(edgeSet(LabelSpreading.knnEdges(doubles, "vec_id", "embedding", 3)) ==
+      exact.map { case (s, d, sim) => (s, d, Some(sim)) })
+  }
+
+  test("property: bucketKeys equal the Catalyst sign-bit sum over float hyperplanes") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import graft.expr.GraftFunctions.dot_product
+    // coordinates include NaN, +-Inf and -0.0, which Spark's `>=` orders as
+    // NaN highest and -0.0 == 0.0
+    val coord = Gen.frequency(
+      6 -> Gen.choose(-2f, 2f), 1 -> Gen.const(Float.NaN), 1 -> Gen.const(Float.PositiveInfinity),
+      1 -> Gen.const(Float.NegativeInfinity), 1 -> Gen.const(-0f), 1 -> Gen.const(0f))
+    val cases = for {
+      dim <- Gen.chooseNum(1, 4)
+      nPlanes <- Gen.chooseNum(0, 6)
+      nTables <- Gen.chooseNum(1, 3)
+      planes <- Gen.listOfN(nTables, Gen.listOfN(nPlanes, Gen.listOfN(dim, coord)))
+      vs <- Gen.listOfN(12, Gen.listOfN(dim, coord))
+    } yield (planes, vs ++ Seq(Seq.fill(dim)(0f), null, Seq.fill(dim + 1)(1f)))
+    val schema = StructType(Seq(StructField("embedding", ArrayType(FloatType, containsNull = false))))
+    // the reference runs without subexpression elimination: when one
+    // projection holds both a [0.0] and a [-0.0] plane, Spark 4.1 evaluates
+    // the reused dot_product before computing it for the row, so a row sees
+    // the previous row's sign bit (a NULL vector then gets bits)
+    val ref = spark.newSession()
+    ref.conf.set("spark.sql.subexpressionElimination.enabled", "false")
+    val prop = Prop.forAllNoShrink(cases) { case (planes, vs) =>
+      val nPlanes = planes.head.size
+      // the reference: sum over p of when(dot_product(vec, plane_p) >= 0, 1 << p)
+      // against float literals, packed with its table index
+      val catalyst = planes.zipWithIndex.map { case (table, t) =>
+        table.zipWithIndex.foldLeft(lit(t.toLong << nPlanes)) { case (acc, (plane, p)) =>
+          acc + when(dot_product(col("embedding"), typedLit(plane.toArray)) >= 0, lit(1L << p)).otherwise(lit(0L))
+        }
+      }
+      val want = ref.createDataFrame(spark.sparkContext.parallelize(vs.map(Row(_)), 2), schema)
+        .select(catalyst: _*).collect().map(r => Seq.tabulate(planes.size)(r.getLong)).toSeq
+      val keys = LabelSpreading.bucketKeys(planes.map(_.map(_.map(_.toDouble).toArray).toArray).toArray) _
+      val got = vs.map(v => keys(if (v == null) null else v.map(_.toDouble).toArray).toSeq)
+      Prop(got == want) :| s"planes $planes: got $got, want $want"
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(30), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
 
   test("knnEdgesApprox: high recall on a random corpus, no cartesian plan") {
@@ -168,9 +216,13 @@ class LabelSpreadingSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) None else Some(r.getDouble(2))))
       val want = bruteKnn(rows, k)
       val overK = got.groupBy(_._1).collect { case (s, es) if es.length > k => s }
-      Prop(got.toSet == want && got.length == want.size && overK.isEmpty) :|
+      // with no planes every row shares one bucket per table: the LSH path
+      // scores every pair twice and must de-duplicate back to the oracle
+      val approx = edgeSet(LabelSpreading.knnEdgesApprox(df, "vec_id", "embedding", k,
+        nPlanes = 0, nTables = 2))
+      Prop(got.toSet == want && got.length == want.size && overK.isEmpty && approx == want) :|
         s"n=${vs.size} k=$k: missing ${(want -- got).take(5)}, extra ${(got.toSet -- want).take(5)}, " +
-          s"srcs over k $overK"
+          s"srcs over k $overK, approx off by ${((approx -- want) ++ (want -- approx)).take(5)}"
     }
     val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(12), prop)
     assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
