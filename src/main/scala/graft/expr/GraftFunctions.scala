@@ -13,6 +13,7 @@ object GraftFunctions {
   private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "partial_ratio" -> (es => PartialRatio(es(0), es(1))),
     "jaccard_char_distance" -> (es => JaccardCharDistance(es(0), es(1))),
+    "shingle_jaccard" -> (es => ShingleJaccard(es(0), es(1))),
     "modal_label" -> (es => ModalLabel(es.head)),
     "cosine_sim" -> (es => CosineSimilarity(es(0), es(1))),
     "dot_product" -> (es => DotProduct(es(0), es(1))),
@@ -30,6 +31,7 @@ object GraftFunctions {
   def partial_ratio(a: Column, b: Column): Column = col(PartialRatio(ex(a), ex(b)))
   def jaccard_char_distance(a: Column, b: Column): Column =
     col(JaccardCharDistance(ex(a), ex(b)))
+  def shingle_jaccard(a: Column, b: Column): Column = col(ShingleJaccard(ex(a), ex(b)))
   def modal_label(arr: Column): Column = col(ModalLabel(ex(arr)))
   def cosine_sim(a: Column, b: Column): Column = col(CosineSimilarity(ex(a), ex(b)))
   def dot_product(a: Column, b: Column): Column = col(DotProduct(ex(a), ex(b)))

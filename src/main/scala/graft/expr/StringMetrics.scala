@@ -16,6 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `jaccardCharDistance` reproduces nltk's `jaccard_distance` over character
   * sets (/root/reference/src/Label_matching.py:45-46 — char-level, NOT
   * token-level).
+  *
+  * `shingleJaccard` is q17's exact verify: Jaccard similarity of two texts'
+  * distinct word 3-shingle sets (`MinHash.foreachShingle`).
   */
 object StringMetrics {
 
@@ -175,4 +178,40 @@ object StringMetrics {
 
   def jaccardCharDistance(a: UTF8String, b: UTF8String): Double =
     jaccardCharDistance(a.toString, b.toString)
+
+  // Reusable per-thread shingle sets (cleared after every pair). Their
+  // elements are views of the argument strings' memory, never copies.
+  private val shinglesA = new ThreadLocal[java.util.HashSet[UTF8String]] {
+    override def initialValue(): java.util.HashSet[UTF8String] = new java.util.HashSet[UTF8String]()
+  }
+  private val shinglesB = new ThreadLocal[java.util.HashSet[UTF8String]] {
+    override def initialValue(): java.util.HashSet[UTF8String] = new java.util.HashSet[UTF8String]()
+  }
+
+  /** |A∩B| / |A∪B| over the distinct word 3-shingles of `a` and `b`, equal
+    * bit for bit to the column formulation over the two shingle arrays (the
+    * size of their intersection, cast to double, over the size of their
+    * union; DedupQueriesSpec pins it): both sets compare shingles by their
+    * bytes (UTF8String equality), and the division is the same IEEE
+    * division of the two counts. Each side has at least one shingle, so the
+    * union is never empty. */
+  def shingleJaccard(a: UTF8String, b: UTF8String): Double = {
+    val sa = shinglesA.get()
+    val sb = shinglesB.get()
+    var inter = 0
+    try {
+      MinHash.foreachShingle(a)((off, len) => sa.add(view(a, off, len)))
+      MinHash.foreachShingle(b) { (off, len) =>
+        val sh = view(b, off, len)
+        if (sb.add(sh) && sa.contains(sh)) inter += 1
+      }
+      inter.toDouble / (sa.size() + sb.size() - inter).toDouble
+    } finally {
+      sa.clear()
+      sb.clear()
+    }
+  }
+
+  private def view(s: UTF8String, off: Int, len: Int): UTF8String =
+    UTF8String.fromAddress(s.getBaseObject, s.getBaseOffset + off, len)
 }

@@ -16,7 +16,7 @@ import org.apache.spark.sql.graftbridge.Bridge.AbstractType
   * surrounding projections/filters.
   */
 
-/** Shared body of the two string-pair kernels: both arguments strings,
+/** Shared body of the string-pair kernels: both arguments strings,
   * NULL in -> NULL out, codegen a static call to `StringMetrics.<kernel>`.
   * Serializable so that Java deserialization of a case-class subclass
   * restores these constructor fields (tasks ship interpreted expressions). */
@@ -46,6 +46,17 @@ case class PartialRatio(left: Expression, right: Expression)
 case class JaccardCharDistance(left: Expression, right: Expression)
     extends StringPairKernel(DoubleType, "jaccardCharDistance", StringMetrics.jaccardCharDistance) {
   override def prettyName: String = "jaccard_char_distance"
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+/** Jaccard similarity of two texts' distinct word 3-shingle sets: q17's
+  * exact verify of an LSH candidate pair (see StringMetrics.shingleJaccard
+  * for the parity argument vs the shingle-array formulation, which
+  * DedupQueriesSpec pins). */
+case class ShingleJaccard(left: Expression, right: Expression)
+    extends StringPairKernel(DoubleType, "shingleJaccard", StringMetrics.shingleJaccard) {
+  override def prettyName: String = "shingle_jaccard"
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }

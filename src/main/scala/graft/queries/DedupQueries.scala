@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Graft.table
 
@@ -16,9 +16,10 @@ import graft.Graft.table
   *    -> bucket on (band, key) and emit in-bucket pairs -> exact Jaccard
   *    verify on candidates only. The LSH banding replaces the O(N^2)
   *    all-pairs comparison with ONE shuffle keyed on band signatures; the
-  *    expensive shingle-set Jaccard runs only on colliding pairs. All
-  *    hashing is plain integer arithmetic on md5 prefixes so the DuckDB
-  *    oracle reproduces it bit-for-bit (no engine-private hash).
+  *    shingle-set Jaccard (one codegen'd kernel, `shingle_jaccard`) runs
+  *    only on colliding pairs. All hashing is plain integer arithmetic on
+  *    md5 prefixes so the DuckDB oracle reproduces it bit-for-bit (no
+  *    engine-private hash).
   *
   * MinHash scheme: h_i(x) = (A_i * (x mod P) + B_i) mod P over the Mersenne
   * prime P = 2^31 - 1, x = first 15 hex chars (60 bits) of md5(shingle).
@@ -47,17 +48,6 @@ object DedupQueries {
   private val bands = 4
   private val rowsPerBand = 3
   private val nearDupThreshold = 0.5
-
-  /** Distinct word 3-shingles of a space-tokenized text (whole text when
-    * shorter than 3 tokens, mirroring the degenerate-input convention).
-    * private[graft] for direct unit coverage of the degenerate branches. */
-  private[graft] def shingles(text: Column): Column = {
-    val toks = split(text, " ")
-    array_distinct(
-      when(size(toks) >= 3,
-        transform(sequence(lit(1), size(toks) - 2), i => concat_ws(" ", slice(toks, i, lit(3)))))
-        .otherwise(array(text)))
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -91,8 +81,8 @@ object DedupQueries {
       // signature slots (MinHashFromText kernel): each shingle is a byte
       // range of the raw text, so the pass allocates nothing per shingle.
       // Identical arithmetic slot-for-slot to the hex/conv formulation over
-      // `shingles` (unit parity test), which the DuckDB oracle replays, so
-      // the oracle matches bit-for-bit.
+      // the shingle array (unit parity test), which the DuckDB oracle
+      // replays, so the oracle matches bit-for-bit.
       val sig = docsWide.select(col("doc_id"),
         graft.expr.GraftFunctions.minhash_text(col("text")).as("sig"))
       // band keys: r consecutive signature slots joined into one string key
@@ -119,8 +109,9 @@ object DedupQueries {
       // surviving O(|cand|) rows — so no join below ever broadcasts or
       // shuffles full documents of more than ~2|cand| rows: document bodies
       // move exactly once (§8: decide with small rows, move big rows once).
-      // Shingles are re-derived on candidate rows only: O(|cand|), not
-      // O(corpus).
+      // The verify is one `shingle_jaccard` call per candidate pair: it
+      // builds both texts' shingle sets from byte ranges of the texts, so
+      // no token or shingle array is materialized.
       val candIds = cand
         .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
         .distinct()
@@ -129,16 +120,14 @@ object DedupQueries {
       // candDocs feeds both the text_a and text_b side; checkpointing it
       // keeps the verify at exactly one corpus pass.
       val candDocs = graft.Graft.materialize(candDocsPlan)
-      val sa = shingles(col("text_a"))
-      val sb = shingles(col("text_b"))
       val withA = candDocs
         .join(broadcast(cand), col("doc_id") === col("doc_a"))
         .select(col("doc_a"), col("doc_b"), col("text").as("text_a"))
       candDocs.select(col("doc_id"), col("text").as("text_b"))
         .join(withA, col("doc_id") === col("doc_b"))
         .select(col("doc_a"), col("doc_b"),
-          round(size(array_intersect(sa, sb)).cast("double") /
-            size(array_union(sa, sb)), 6).as("jaccard"))
+          round(graft.expr.GraftFunctions.shingle_jaccard(col("text_a"), col("text_b")), 6)
+            .as("jaccard"))
         .withColumn("near_dup", (col("jaccard") >= nearDupThreshold).cast("int"))
   }
 

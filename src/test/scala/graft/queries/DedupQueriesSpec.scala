@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
@@ -73,6 +74,18 @@ class DedupQueriesSpec extends AnyFunSuite {
     assert(!pairs.keys.exists { case (a, b) => a == 3L || b == 3L || a == 6L || b == 6L })
   }
 
+  /** Distinct word 3-shingles of a space-tokenized text (whole text when
+    * shorter than 3 tokens): the column formulation the DuckDB oracle
+    * replays, and the reference for the `minhash_text` and
+    * `shingle_jaccard` kernels. */
+  private def shingles(text: Column): Column = {
+    val toks = split(text, " ")
+    array_distinct(
+      when(size(toks) >= 3,
+        transform(sequence(lit(1), size(toks) - 2), i => concat_ws(" ", slice(toks, i, lit(3)))))
+        .otherwise(array(text)))
+  }
+
   /** (id, text) rows -> id -> minhash_text signature. */
   private def kernelSigs(df: DataFrame): Map[Long, Seq[Long]] =
     df.select(col("id"), graft.expr.GraftFunctions.minhash_text(col("t")).as("sig"))
@@ -85,7 +98,7 @@ class DedupQueriesSpec extends AnyFunSuite {
     val P = graft.expr.MinHash.P
     val A = graft.expr.MinHash.A
     val B = graft.expr.MinHash.B
-    val hs = transform(DedupQueries.shingles(col("t")), x =>
+    val hs = transform(shingles(col("t")), x =>
       conv(substring(md5(x), 1, 15), 16, 10).cast("long") % P)
     df.select(col("id"), hs.as("hs"))
       .select(col("id") +: A.indices.map(i =>
@@ -150,19 +163,18 @@ class DedupQueriesSpec extends AnyFunSuite {
       assert(got(id) == sigs, s"text '${texts(id.toInt)}' signature mismatch")
   }
 
+  // words, runs of spaces (leading, trailing, doubled) and multi-byte
+  // UTF-8 (2-, 3- and 4-byte sequences), plus empty and all-space texts
+  private val word = Gen.frequency(
+    2 -> Gen.alphaLowerStr.map(_.take(5)),
+    1 -> Gen.oneOf("é", "ünï", "ça", "日本", "\uD83D\uDE00"))
+  private val atom = Gen.frequency(6 -> word, 3 -> Gen.const(" "), 1 -> Gen.const("   "))
+  private val text = Gen.frequency(
+    1 -> Gen.const(""),
+    1 -> Gen.chooseNum(1, 4).map(" " * _),
+    8 -> Gen.chooseNum(1, 20).flatMap(n => Gen.listOfN(n, atom)).map(_.mkString))
+
   test("property: minhash_text equals the HOF reference") {
-    import org.scalacheck.{Gen, Prop, Test}
-    // words, runs of spaces (leading, trailing, doubled) and multi-byte
-    // UTF-8 (2-, 3- and 4-byte sequences), plus empty and all-space texts
-    val atom = Gen.frequency(
-      4 -> Gen.alphaLowerStr.map(_.take(5)),
-      3 -> Gen.const(" "),
-      1 -> Gen.const("   "),
-      2 -> Gen.oneOf("é", "ünï", "ça", "日本", "\uD83D\uDE00"))
-    val text = Gen.frequency(
-      1 -> Gen.const(""),
-      1 -> Gen.chooseNum(1, 4).map(" " * _),
-      8 -> Gen.chooseNum(1, 20).flatMap(n => Gen.listOfN(n, atom)).map(_.mkString))
     val corpus = Gen.chooseNum(1, 30).flatMap(n => Gen.listOfN(n, text))
     // one DataFrame per property run: the whole generated corpus at once
     val prop = Prop.forAllNoShrink(corpus) { texts =>
@@ -180,11 +192,108 @@ class DedupQueriesSpec extends AnyFunSuite {
       spark.sparkContext.parallelize(Seq(
         Row("a b c d"), Row("a b"), Row("solo"), Row(""))),
       StructType(Seq(StructField("t", StringType, nullable = false))))
-    val got = df.select(DedupQueries.shingles(col("t")).as("sh"))
+    val got = df.select(shingles(col("t")).as("sh"))
       .collect().map(_.getSeq[String](0).toList)
     assert(got.contains(List("a b c", "b c d")))
     assert(got.contains(List("a b")))   // <3 tokens: whole text
     assert(got.contains(List("solo")))
     assert(got.contains(List("")))      // empty string: single empty shingle
+  }
+
+  /** (id, a, b) rows -> id -> (shingle_jaccard(a, b), the reference
+    * |A∩B| / |A∪B| over `shingles`, unrounded). */
+  private def jaccards(pairs: Seq[(String, String)]): Map[Long, (Double, Double)] = {
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        pairs.zipWithIndex.map { case ((a, b), i) => Row(i.toLong, a, b) }, 2),
+      StructType(Seq(
+        StructField("id", LongType, nullable = false),
+        StructField("a", StringType, nullable = false),
+        StructField("b", StringType, nullable = false))))
+    val (sa, sb) = (shingles(col("a")), shingles(col("b")))
+    df.select(col("id"),
+        graft.expr.GraftFunctions.shingle_jaccard(col("a"), col("b")),
+        size(array_intersect(sa, sb)).cast("double") / size(array_union(sa, sb)))
+      .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
+  }
+
+  test("shingle_jaccard: fixed cases equal the reference and their exact values") {
+    // 300-token texts sharing their first 150 tokens: 298 shingles a side,
+    // the 148 that start below token 148 shared
+    val long = (0 until 300).map(i => s"w$i")
+    val longB = long.take(150) ++ long.drop(150).map(_ + "x")
+    val cases = Seq(
+      (long.mkString(" "), longB.mkString(" ")) -> 148.0 / (298 + 298 - 148),
+      ("alpha bravo charlie delta", "alpha bravo charlie delta") -> 1.0,
+      ("", "") -> 1.0,
+      ("", "a b c") -> 0.0,
+      ("two tokens", "two tokens") -> 1.0,        // < 3 tokens: whole text
+      ("two tokens", "two  tokens") -> 0.0,       // 3 tokens (one empty)
+      ("solo", "solo word here") -> 0.0,
+      ("dup dup dup dup", "dup dup dup") -> 1.0,  // repeats count once
+      ("dup dup dup dup", "dup dup dup x") -> 0.5,
+      ("a b c d e", "a b c d f") -> 2.0 / 4,
+      ("héllo wörld ça va", "héllo wörld ça") -> 1.0 / 2)
+    val got = jaccards(cases.map(_._1))
+    for ((((a, b), want), i) <- cases.zipWithIndex) {
+      val (k, ref) = got(i.toLong)
+      assert(k == want && ref == want, s"'$a' vs '$b': kernel $k, reference $ref, want $want")
+    }
+  }
+
+  test("property: shingle_jaccard equals |A∩B| / |A∪B| over the shingle arrays, unrounded") {
+    // half the pairs are a text and a copy with 1-3 words substituted, so
+    // the intersection is usually non-empty; the rest are independent texts
+    val substituted = (t: String) => {
+      val toks = t.split(" ", -1)
+      Gen.chooseNum(1, 3)
+        .flatMap(k => Gen.listOfN(k, Gen.zip(Gen.chooseNum(0, toks.length - 1), word)))
+        .map { subs =>
+          val out = toks.clone()
+          subs.foreach { case (i, w) => out(i) = w }
+          out.mkString(" ")
+        }
+    }
+    val pair = Gen.frequency(
+      1 -> Gen.zip(text, text),
+      1 -> text.flatMap(t => substituted(t).map(t -> _)))
+    val corpus = Gen.chooseNum(1, 30).flatMap(n => Gen.listOfN(n, pair))
+    val prop = Prop.forAllNoShrink(corpus) { pairs =>
+      val bad = jaccards(pairs).collect {
+        case (id, (k, ref)) if java.lang.Double.doubleToLongBits(k) !=
+          java.lang.Double.doubleToLongBits(ref) =>
+          val (a, b) = pairs(id.toInt)
+          s"'$a' vs '$b': $k != $ref"
+      }
+      Prop(bad.isEmpty) :| bad.mkString("; ")
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(30), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
+  test("q17 on a 1,000-copy hot cluster returns every copy pair once, nothing else") {
+    val copies = 1000
+    val unrelated = Seq(
+      "navy wool coat with hood",
+      "silver ring set of three",
+      "kids rain boots yellow",
+      "linen table cloth round white")
+    val rows = Seq.tabulate(copies)(i => Row(i.toLong, "red cotton shirt slim fit", "en", "s", 25L)) ++
+      unrelated.zipWithIndex.map { case (t, i) => Row((copies + i).toLong, t, "en", "s", t.length.toLong) }
+    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_hot").toString
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), docsSchema)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val out = DedupQueries.queries("q17_minhash_neardup")(spark, dir)
+    val copyPair = col("doc_a") < col("doc_b") && col("doc_b") < copies
+    val r = out.agg(count(lit(1)), count_distinct(col("doc_a"), col("doc_b")),
+        sum(when(copyPair, 1).otherwise(0)), min(col("jaccard")), max(col("jaccard")),
+        min(col("near_dup")), max(col("near_dup")))
+      .head()
+    val nPairs = copies.toLong * (copies - 1) / 2  // 499,500
+    assert(r.getLong(0) == nPairs, "row count")
+    assert(r.getLong(1) == nPairs, "distinct (doc_a, doc_b) count")
+    assert(r.getLong(2) == nPairs, "copy pairs (doc_a < doc_b < 1,000)")
+    assert(r.getDouble(3) == 1.0 && r.getDouble(4) == 1.0, "jaccard")
+    assert(r.getInt(5) == 1 && r.getInt(6) == 1, "near_dup")
   }
 }
