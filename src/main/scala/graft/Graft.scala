@@ -6,11 +6,11 @@ import org.apache.spark.sql.functions._
 /** Entry helpers shared by the engine: session construction, table access,
   * and the one materialization policy the iterative operators use.
   *
-  * Scale notes (100 TB target): every knob here is also correct on a real
-  * cluster — AQE (on by default) handles skew/coalescing at runtime, shuffle
-  * partitions are overridden by AQE's coalescing, and broadcast threshold
-  * stays default so dimension tables (region/nation/supplier/part at TPC-H
-  * ratios) broadcast.
+  * Scale notes (100 TB target): the session settings are also correct on a
+  * real cluster — AQE (on by default) handles skew/coalescing at runtime,
+  * shuffle partitions are overridden by AQE's coalescing, and broadcast
+  * threshold stays default so dimension tables (region/nation/supplier/part
+  * at TPC-H ratios) broadcast. The engine reads no session conf.
   */
 object Graft {
 
@@ -30,21 +30,12 @@ object Graft {
     spark
   }
 
-  /** Materialize an intermediate that a plan reuses, per the session conf
-    * `graft.materialize`:
-    *  - `localCheckpoint` (default): eager, truncates the logical plan and the
-    *    lineage, so later operators neither recompute nor re-optimize it. The
-    *    blocks are executor-local and not replicated: losing an executor
-    *    fails the job, which is acceptable for short jobs, not for long runs.
-    *  - `none`: returns `df` unchanged, so the full plan stays visible (what
-    *    `graft.Explain` prints). */
-  def materialize(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get("graft.materialize", "localCheckpoint") match {
-      case "localCheckpoint" => df.localCheckpoint()
-      case "none" => df
-      case other => throw new IllegalArgumentException(
-        s"graft.materialize must be localCheckpoint or none, got '$other'")
-    }
+  /** Materialize an intermediate that a plan reuses: an eager
+    * `localCheckpoint`, which truncates the logical plan and the lineage, so
+    * later operators neither recompute nor re-optimize it. The blocks are
+    * executor-local and not replicated: losing an executor fails the job,
+    * which is acceptable for short jobs, not for long runs. */
+  def materialize(df: DataFrame): DataFrame = df.localCheckpoint()
 
   /** Spread a CPU-heavy per-row stage across all cores when the upstream
     * scan cannot: the harness fixtures are single-row-group parquet files,
@@ -65,8 +56,9 @@ object Graft {
     * `idCol` values, lo < hi, that share the value of any one of
     * `bucketKeys` (one key per hash table or band).
     *
-    * One row per (table, bucket, id) goes into the only shuffle — ids, never
-    * the payload — which collects each bucket's sorted id list. Pairs come
+    * Two shuffles, both of ids, never the payload: one row per (table,
+    * bucket, id) goes into the aggregation that collects each bucket's sorted
+    * id list, and the pairs go into the final `distinct`. Pairs come
     * from a TWO-LEVEL explode (posexplode the list, then explode each
     * element's higher partners), so no row ever holds more than a bucket's
     * O(n) id list: a single explode of the flattened pair array would build

@@ -282,9 +282,10 @@ object LabelSpreading {
     *         id of `y`; an id without edges keeps f = (1 - alpha) * y
     *
     * The seeded edge table and the result are materialized with
-    * `Graft.materialize`: under the default localCheckpoint the 5-iteration
-    * plan would otherwise embed the O(N^2) k-NN subtree 5x (~1 s of
-    * analyzer/optimizer time per run, r21 event-log audit).
+    * `Graft.materialize`, so the 5-iteration plan reads the edges from a
+    * checkpoint instead of embedding the O(N^2) k-NN subtree once per
+    * iteration. For q12, `graft.Explain` prints three executions: k-NN
+    * through the seeded edges, the iterations, and the thresholding.
     */
   def spread(sEdges: DataFrame, y: DataFrame, idCol: String,
              alpha: Double, iters: Int): DataFrame = {

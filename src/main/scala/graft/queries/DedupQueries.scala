@@ -66,7 +66,9 @@ object DedupQueries {
   /** The two provably-tiny intermediates — candidate pairs and candidate
     * docs — go through `Graft.materialize`, so the expensive MinHash
     * pipeline and the corpus scan each run exactly ONCE (still fully
-    * computed from parquet on every invocation). */
+    * computed from parquet on every invocation). `graft.Explain` prints
+    * one execution each for candidates, candidate docs and the verify,
+    * after `widen`'s partition count of its input (`rdd`). */
   private def q17(s: SparkSession, dir: String): DataFrame = {
       val docsText = table(s, dir, "documents")
         .where(col("text").isNotNull)
@@ -91,9 +93,10 @@ object DedupQueries {
           element_at(col("sig"), j * rowsPerBand + r + 1)): _*)
       }
       // candidates: bucket once on (band, key) and emit each bucket's
-      // id-ordered pairs; the minhash pipeline runs once and the only
-      // shuffle is the (band, key) partial aggregation. Same pair set as the
-      // oracle's banded self-join: within one bucket each doc_id appears once.
+      // id-ordered pairs; the minhash pipeline runs once. Its plan shuffles
+      // three times: widen's round-robin, the (band, key) aggregation and
+      // the pair distinct. Same pair set as the oracle's banded self-join:
+      // within one bucket each doc_id appears once.
       val candPlan = graft.Graft.bucketPairs(sig, "doc_id", bandKeys).toDF("doc_a", "doc_b")
       // cand is referenced three times below (pair attach + both ends of
       // the id list); eagerly materializing it guarantees the MinHash
@@ -118,7 +121,9 @@ object DedupQueries {
       val candDocsPlan = docsWide
         .join(broadcast(candIds), Seq("doc_id"), "left_semi")
       // candDocs feeds both the text_a and text_b side; checkpointing it
-      // keeps the verify at exactly one corpus pass.
+      // keeps the verify at exactly one corpus pass. Its plan shuffles the
+      // ids for the candIds distinct, and round-robins only the surviving
+      // docs: the optimizer pushes the semi join below widen's repartition.
       val candDocs = graft.Graft.materialize(candDocsPlan)
       val withA = candDocs
         .join(broadcast(cand), col("doc_id") === col("doc_a"))

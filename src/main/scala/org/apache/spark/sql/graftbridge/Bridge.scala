@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -7,8 +8,9 @@ import org.apache.spark.sql.types.{AbstractDataType, DataType, TypeCollection}
 
 /** Minimal access bridge: a few Catalyst APIs graft needs (Column <->
   * Expression, AbstractDataType for ExpectsInputTypes) are `private[sql]`
-  * in Spark 4.x, so this one object lives under the org.apache.spark.sql
-  * namespace — the conventional pattern for Spark extension libraries.
+  * in Spark 4.x and the listener bus is `private[spark]`, so this one object
+  * lives under the org.apache.spark.sql namespace — the conventional
+  * pattern for Spark extension libraries.
   * Everything else in graft stays in its own packages. */
 object Bridge {
   type AbstractType = AbstractDataType
@@ -29,4 +31,8 @@ object Bridge {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  /** Block until every event posted so far has reached its listeners, so a
+    * `QueryExecutionListener`'s results can be read. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

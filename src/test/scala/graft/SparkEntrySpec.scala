@@ -5,8 +5,8 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, LogicalRDD}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The query inventory, the sessions it runs on and the
-  * `graft.materialize` policy. */
+/** The query inventory, the sessions it runs on, the checkpoints that
+  * `Graft.materialize` puts into q12 and q17, and the plans `Explain` prints. */
 class SparkEntrySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -43,24 +43,40 @@ class SparkEntrySpec extends AnyFunSuite {
     df.queryExecution.sparkPlan.exists(_.isInstanceOf[FileSourceScanExec])
   private def rows(df: DataFrame): Set[Row] = df.collect().toSet
 
-  test("materialize: checkpoints by default, full plans under none") {
+  test("materialize: checkpoints by default") {
     val dir = writeFixture()
-    val names = Seq("q12_label_propagation", "q17_minhash_neardup")
-    val byDefault = names.map(n => SparkEntry.queries(n)(spark, dir))
-    for ((n, df) <- names.zip(byDefault)) {
+    for (n <- Seq("q12_label_propagation", "q17_minhash_neardup")) {
+      val df = SparkEntry.queries(n)(spark, dir)
       assert(readsCheckpoint(df), s"$n should read checkpointed data")
       assert(!scansFiles(df), s"$n should not rescan its input")
     }
-    spark.conf.set("graft.materialize", "none")
-    try {
-      val full = names.map(n => SparkEntry.queries(n)(spark, dir))
-      for ((n, df) <- names.zip(full)) {
-        assert(!readsCheckpoint(df), s"$n should keep its full plan")
-        assert(scansFiles(df), s"$n plan should reach the parquet scan")
+  }
+
+  test("Explain prints the final plan of every execution a query performs") {
+    val dir = writeFixture()
+    // q17's `Graft.widen` asks its input plan for a partition count: an
+    // execution named `rdd`
+    val expected = Seq(
+      "q12_label_propagation" -> Seq("localCheckpoint", "localCheckpoint", "overwrite"),
+      "q17_minhash_neardup" -> Seq("rdd", "localCheckpoint", "localCheckpoint", "overwrite"))
+    for ((n, actions) <- expected) {
+      val plans = Explain.executedPlans(spark, dir, n)
+      assert(plans.map(_._1) == actions, n)
+      // a plan without an exchange (q12's thresholding) is not adaptive
+      for ((action, plan) <- plans) {
+        assert(!plan.contains("isFinalPlan=false"), s"$n $action: initial plan printed")
+        assert(!plan.contains("AdaptiveSparkPlan") || plan.contains("isFinalPlan=true"),
+          s"$n $action: no final plan")
       }
-      for ((n, (a, b)) <- names.zip(byDefault.zip(full)))
-        assert(rows(a) == rows(b), s"$n rows differ between policies")
-    } finally spark.conf.unset("graft.materialize")
+      val runs = plans.dropWhile(_._1 == "rdd").map(_._2)
+      assert(runs.head.contains("isFinalPlan=true"), s"$n: first checkpoint not final")
+      assert(runs.head.contains("Scan parquet"), s"$n: first checkpoint should scan the input")
+      assert(!runs.head.contains("Scan ExistingRDD"), s"$n: first checkpoint reads a checkpoint")
+      for (plan <- runs.tail)
+        assert(plan.contains("Scan ExistingRDD"), s"$n: later plans should read a checkpoint")
+    }
+    val missing = Explain.executedPlans(spark, s"$dir/absent", "q17_minhash_neardup")
+    assert(missing.size == 1 && missing.head._1 == "failed", missing.toString)
   }
 
   test("queries run on a session graft did not build") {
@@ -73,11 +89,5 @@ class SparkEntrySpec extends AnyFunSuite {
         s"$n rows differ on a foreign session")
     assert(spark.catalog.functionExists("dot_product"))
     assert(!foreign.catalog.functionExists("dot_product"), "queries registered SQL names")
-  }
-
-  test("materialize rejects an unknown policy") {
-    spark.conf.set("graft.materialize", "persist")
-    try intercept[IllegalArgumentException](Graft.materialize(spark.range(1).toDF()))
-    finally spark.conf.unset("graft.materialize")
   }
 }
