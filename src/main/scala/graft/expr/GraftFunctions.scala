@@ -11,7 +11,7 @@ import org.apache.spark.sql.graftbridge.Bridge
 object GraftFunctions {
 
   private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "partial_ratio" -> (es => PartialRatio(es(0), es(1))),
+    "edit_distance" -> (es => EditDistance(es(0), es(1))),
     "jaccard_char_distance" -> (es => JaccardCharDistance(es(0), es(1))),
     "shingle_jaccard" -> (es => ShingleJaccard(es(0), es(1))),
     "modal_label" -> (es => ModalLabel(es.head)),
@@ -28,7 +28,7 @@ object GraftFunctions {
   private def col(e: Expression): Column = Bridge.column(e)
   private def ex(c: Column): Expression = Bridge.expression(c)
 
-  def partial_ratio(a: Column, b: Column): Column = col(PartialRatio(ex(a), ex(b)))
+  def edit_distance(a: Column, b: Column): Column = col(EditDistance(ex(a), ex(b)))
   def jaccard_char_distance(a: Column, b: Column): Column =
     col(JaccardCharDistance(ex(a), ex(b)))
   def shingle_jaccard(a: Column, b: Column): Column = col(ShingleJaccard(ex(a), ex(b)))

@@ -1,17 +1,15 @@
 package graft.expr
 
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Pure-JVM string similarity kernels, called from codegen'd expressions.
   *
-  * `partialRatio` reproduces fuzzywuzzy 0.16.0's `fuzz.partial_ratio` forced
-  * onto stdlib difflib semantics (the reference pins that backend —
-  * /root/reference/src/labelling_pipeline.py:131-133), i.e. Ratcliff-Obershelp
-  * longest-matching-block alignment with difflib's autojunk heuristic.
-  * Thresholds downstream (70/25) were tuned against difflib, so this port is
-  * exact: same b2j popularity purge (len>=200, >n/100+1 occurrences), same
-  * non-recursive block queue, same adjacent-block merge, same half-even
-  * rounding of `100 * best`.
+  * `editDistance` is q10's seed edit distance: the Levenshtein distance in
+  * chars, equal to Spark's `levenshtein` (`UTF8String.levenshteinDistance`)
+  * for every input, computed bit-parallel (Myers, J. ACM 1999, in Hyyrö's
+  * edit-distance form, 2001) when both sides are ASCII and the shorter one
+  * has at most 64 chars.
   *
   * `jaccardCharDistance` reproduces nltk's `jaccard_distance` over character
   * sets (/root/reference/src/Label_matching.py:45-46 — char-level, NOT
@@ -22,142 +20,71 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object StringMetrics {
 
-  /** difflib.SequenceMatcher(None, a, b) over char sequences. */
-  final class SeqMatcher(a: Array[Char], b: Array[Char]) {
-    // b2j: char -> ascending indices in b; "popular" chars purged (autojunk)
-    private val b2j = new java.util.HashMap[Char, Array[Int]]()
+  /** Per-thread match masks of the pattern, indexed by ASCII byte. */
+  private val asciiMasks = new ThreadLocal[Array[Long]] {
+    override def initialValue(): Array[Long] = new Array[Long](128)
+  }
 
-    {
-      val tmp = new java.util.HashMap[Char, java.util.ArrayList[Int]]()
-      var j = 0
-      while (j < b.length) {
-        var l = tmp.get(b(j))
-        if (l == null) { l = new java.util.ArrayList[Int](); tmp.put(b(j), l) }
-        l.add(j)
-        j += 1
-      }
-      // autojunk: with no caller junk set, difflib purges chars occurring in
-      // more than n/100+1 positions of b when len(b) >= 200
-      if (b.length >= 200) {
-        val ntest = b.length / 100 + 1
-        val it = tmp.entrySet().iterator()
-        while (it.hasNext) if (it.next().getValue.size() > ntest) it.remove()
-      }
-      tmp.forEach { (c, l) =>
-        val arr = new Array[Int](l.size()); var i = 0
-        while (i < arr.length) { arr(i) = l.get(i); i += 1 }
-        b2j.put(c, arr)
-      }
-    }
+  /** Levenshtein distance between `a` and `b` in chars, equal to
+    * `a.levenshteinDistance(b)`. When both strings are ASCII and the shorter
+    * one (the pattern, m chars) has at most 64, one 64-bit step per char of
+    * the other side tracks the DP column's vertical deltas, and `score` the
+    * last row. Any other input goes to Spark's DP: no workload sends
+    * non-ASCII text here. */
+  def editDistance(a: UTF8String, b: UTF8String): Int = {
+    val swap = a.numBytes > b.numBytes
+    val p = if (swap) b else a
+    val t = if (swap) a else b
+    val m = p.numBytes
+    if (m == 0) return t.numChars
+    if (m > 64) return a.levenshteinDistance(b)
 
-    /** difflib find_longest_match (no junk set => bjunk loops are no-ops). */
-    def findLongestMatch(alo: Int, ahi: Int, blo: Int, bhi: Int): (Int, Int, Int) = {
-      var besti = alo; var bestj = blo; var bestsize = 0
-      var j2len = new java.util.HashMap[Int, Int]()
-      var i = alo
-      while (i < ahi) {
-        val newj2len = new java.util.HashMap[Int, Int]()
-        val idxs = b2j.get(a(i))
-        if (idxs != null) {
-          var p = 0
-          var break = false
-          while (p < idxs.length && !break) {
-            val j = idxs(p)
-            if (j >= blo) {
-              if (j >= bhi) break = true
-              else {
-                val k = j2len.getOrDefault(j - 1, 0) + 1
-                newj2len.put(j, k)
-                if (k > bestsize) { besti = i - k + 1; bestj = j - k + 1; bestsize = k }
-              }
-            }
-            p += 1
-          }
-        }
-        j2len = newj2len
+    val masks = asciiMasks.get()
+    val pBase = p.getBaseObject
+    val pOff = p.getBaseOffset
+    var i = 0
+    try {
+      while (i < m) {
+        val c = Platform.getByte(pBase, pOff + i)
+        if (c < 0) return a.levenshteinDistance(b)
+        masks(c) |= 1L << i
         i += 1
       }
-      // extend on both sides over non-junk equal chars (bjunk empty here, so
-      // the second difflib extension pass over junk chars never fires)
-      while (besti > alo && bestj > blo && a(besti - 1) == b(bestj - 1)) {
-        besti -= 1; bestj -= 1; bestsize += 1
+      val tBase = t.getBaseObject
+      val tOff = t.getBaseOffset
+      val n = t.numBytes
+      val last = 1L << (m - 1)
+      var pv = -1L
+      var mv = 0L
+      var score = m
+      i = 0
+      while (i < n) {
+        val c = Platform.getByte(tBase, tOff + i)
+        if (c < 0) return a.levenshteinDistance(b)
+        val eq = masks(c)
+        val xv = eq | mv
+        val xh = (((eq & pv) + pv) ^ pv) | eq
+        var ph = mv | ~(xh | pv)
+        var mh = pv & xh
+        if ((ph & last) != 0) score += 1
+        else if ((mh & last) != 0) score -= 1
+        // row 0 of the global DP rises by one per column
+        ph = (ph << 1) | 1L
+        mh <<= 1
+        pv = mh | ~(xv | ph)
+        mv = ph & xv
+        i += 1
       }
-      while (besti + bestsize < ahi && bestj + bestsize < bhi &&
-        a(besti + bestsize) == b(bestj + bestsize)) bestsize += 1
-      (besti, bestj, bestsize)
-    }
-
-    /** difflib get_matching_blocks: non-recursive queue + adjacent merge.
-      * Returns (i, j, size) triples sorted, terminator (la, lb, 0) included. */
-    def matchingBlocks(): Array[(Int, Int, Int)] = {
-      val queue = new java.util.ArrayDeque[(Int, Int, Int, Int)]()
-      queue.push((0, a.length, 0, b.length))
-      val blocks = new java.util.ArrayList[(Int, Int, Int)]()
-      while (!queue.isEmpty) {
-        val (alo, ahi, blo, bhi) = queue.pop()
-        val m @ (i, j, k) = findLongestMatch(alo, ahi, blo, bhi)
-        if (k > 0) {
-          blocks.add(m)
-          if (alo < i && blo < j) queue.push((alo, i, blo, j))
-          if (i + k < ahi && j + k < bhi) queue.push((i + k, ahi, j + k, bhi))
-        }
+      score
+    } finally {
+      i = 0
+      while (i < m) {
+        val c = Platform.getByte(pBase, pOff + i)
+        if (c >= 0) masks(c) = 0L
+        i += 1
       }
-      val sorted = new Array[(Int, Int, Int)](blocks.size())
-      blocks.toArray(sorted)
-      java.util.Arrays.sort(sorted, Ordering.Tuple3[Int, Int, Int])
-      // merge adjacent
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
-      var (i1, j1, k1) = (0, 0, 0)
-      sorted.foreach { case (i2, j2, k2) =>
-        if (i1 + k1 == i2 && j1 + k1 == j2) k1 += k2
-        else {
-          if (k1 > 0) out += ((i1, j1, k1))
-          i1 = i2; j1 = j2; k1 = k2
-        }
-      }
-      if (k1 > 0) out += ((i1, j1, k1))
-      out += ((a.length, b.length, 0))
-      out.toArray
-    }
-
-    /** difflib ratio(): 2*M/T, or 1.0 when both empty. */
-    def ratio(): Double = {
-      var matches = 0
-      matchingBlocks().foreach { case (_, _, k) => matches += k }
-      val total = a.length + b.length
-      if (total == 0) 1.0 else 2.0 * matches / total
     }
   }
-
-  def ratio(a: String, b: String): Double =
-    new SeqMatcher(a.toCharArray, b.toCharArray).ratio()
-
-  /** fuzzywuzzy 0.16.0 partial_ratio on difflib backend; 0 for empty input
-    * (fuzzywuzzy's @check_empty_string decorator). */
-  def partialRatio(s1: String, s2: String): Int = {
-    if (s1.isEmpty || s2.isEmpty) return 0
-    val (shorter, longer) =
-      if (s1.length <= s2.length) (s1.toCharArray, s2.toCharArray)
-      else (s2.toCharArray, s1.toCharArray)
-    val blocks = new SeqMatcher(shorter, longer).matchingBlocks()
-    var best = 0.0
-    var bi = 0
-    while (bi < blocks.length) {
-      val (i, j, _) = blocks(bi)
-      val longStart = if (j - i > 0) j - i else 0
-      val longEnd = math.min(longStart + shorter.length, longer.length)
-      val sub = java.util.Arrays.copyOfRange(longer, longStart, longEnd)
-      val r = new SeqMatcher(shorter, sub).ratio()
-      if (r > 0.995) return 100
-      if (r > best) best = r
-      bi += 1
-    }
-    // Python round() = half-even
-    Math.rint(100.0 * best).toInt
-  }
-
-  def partialRatio(a: UTF8String, b: UTF8String): Int =
-    partialRatio(a.toString, b.toString)
 
   /** nltk jaccard_distance over char sets: 1 - |A∩B|/|A∪B|; 0.0 when both
     * empty (identical empty sets; nltk raises — callers never hit it). */

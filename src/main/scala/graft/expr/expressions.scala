@@ -31,12 +31,11 @@ abstract class StringPairKernel(val dataType: DataType, kernel: String,
     defineCodeGen(ctx, ev, (a, b) => s"graft.expr.StringMetrics.$kernel($a, $b)")
 }
 
-/** fuzzywuzzy/difflib partial_ratio(left, right): Int 0..100.
-  * Reference: /root/reference/src/Label_matching.py:47 dispatch with
-  * fuzz.partial_ratio, difflib backend forced at labelling_pipeline.py:131. */
-case class PartialRatio(left: Expression, right: Expression)
-    extends StringPairKernel(IntegerType, "partialRatio", StringMetrics.partialRatio) {
-  override def prettyName: String = "partial_ratio"
+/** Levenshtein distance in chars, equal to Spark's `levenshtein` for every
+  * input (see StringMetrics.editDistance; StringMetricsSpec pins it). */
+case class EditDistance(left: Expression, right: Expression)
+    extends StringPairKernel(IntegerType, "editDistance", StringMetrics.editDistance) {
+  override def prettyName: String = "edit_distance"
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import scala.jdk.CollectionConverters._
 import graft.Graft.table
-import graft.expr.GraftFunctions.{cosine_sim, dot_product, jaccard_char_distance, modal_label}
+import graft.expr.GraftFunctions.{cosine_sim, dot_product, edit_distance, jaccard_char_distance,
+  modal_label}
 
 /** Oracle-checked queries exercising graft's custom Catalyst expressions:
   * the fuzzy seed-labelling pipeline shape (SURVEY §2.3 F1/F5/F6 — reference
@@ -45,13 +46,14 @@ object SimilarityQueries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // F1 crossJoin seed scoring + F5 threshold labelling + F6 modal vote,
-    // with built-in levenshtein (F3), custom jaccard_char_distance (F4) and
-    // a substring-containment label (P8) as the third voter.
+    // with custom edit_distance (F3, Spark's levenshtein computed
+    // bit-parallel), jaccard_char_distance (F4) and a substring-containment
+    // label (P8) as the third voter.
     "q10_seed_label_fuzzy" -> ((s, dir) => {
       // project to (doc_id, text) BEFORE widening (guide §2.3: project
-      // before the exchange); widen so the levenshtein kernel — O(|text| *
-      // |seed|) per pair — parallelizes off the single-row-group fixture
-      // (no-op at scale, see Graft.widen).
+      // before the exchange); widen so the per-pair string kernels
+      // (edit_distance: one 64-bit step per text char) parallelize off the
+      // single-row-group fixture (no-op at scale, see Graft.widen).
       val d = graft.Graft.widen(
         table(s, dir, "documents").select(col("doc_id"), col("text")))
       val seedDf = s.createDataFrame(
@@ -63,7 +65,7 @@ object SimilarityQueries {
         .crossJoin(broadcast(seedDf))
         .select(
           col("doc_id"),
-          levenshtein(lower(col("text")), lower(col("seed"))).as("lev"),
+          edit_distance(lower(col("text")), lower(col("seed"))).as("lev"),
           jaccard_char_distance(lower(col("text")), lower(col("seed"))).as("jac"),
           when(lower(col("text")).contains(lower(col("seed"))), 1).otherwise(0).as("sub"))
         .groupBy(col("doc_id"))
@@ -118,10 +120,12 @@ object SimilarityQueries {
 
   val oracleSql: Map[String, String] = Map(
     // Parity note: graft's jaccard_char_distance sets are UTF-16 chars while
-    // DuckDB's jaccard() operates on bytes — identical on the ASCII synthetic
-    // corpus (and the reference's Latin-1 retail names), divergent on
-    // multi-byte text. Documented assumption, revisit if non-ASCII fixtures
-    // are introduced.
+    // DuckDB's jaccard() operates on bytes, and graft's edit_distance (like
+    // Spark's levenshtein) counts code points while DuckDB 1.0.0's
+    // levenshtein() counts bytes (levenshtein('é', 'e') is 2 there, 1 here)
+    // — identical on the ASCII synthetic corpus (and the reference's Latin-1
+    // retail names), divergent on multi-byte text. Documented assumption,
+    // revisit if non-ASCII fixtures are introduced.
     "q10_seed_label_fuzzy" ->
       s"""WITH scored AS (
            SELECT doc_id,

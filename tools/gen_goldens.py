@@ -1,25 +1,9 @@
-"""Golden generator for string-metric parity tests.
+"""Golden generator for the string-metric parity test: nltk-style
+jaccard_distance over character sets.
 
-partial_ratio re-implemented from the published fuzzywuzzy 0.16.0 algorithm
-on top of stdlib difflib (the reference forces the difflib backend).
+Usage: python3 tools/gen_goldens.py   (rewrites src/test/resources/string_metrics_golden.csv)
 """
-import csv, random, difflib
-
-def partial_ratio(s1, s2):
-    if len(s1) == 0 or len(s2) == 0:
-        return 0
-    shorter, longer = (s1, s2) if len(s1) <= len(s2) else (s2, s1)
-    m = difflib.SequenceMatcher(None, shorter, longer)
-    scores = []
-    for i, j, k in m.get_matching_blocks():
-        long_start = j - i if (j - i) > 0 else 0
-        long_substr = longer[long_start:long_start + len(shorter)]
-        m2 = difflib.SequenceMatcher(None, shorter, long_substr)
-        r = m2.ratio()
-        if r > .995:
-            return 100
-        scores.append(r)
-    return int(round(100 * max(scores)))
+import csv, os, random
 
 def jaccard_char(a, b):
     sa, sb = set(a), set(b)
@@ -58,10 +42,11 @@ for _ in range(50):
     b = " ".join(rng.choice(words) for _ in range(rng.randint(4, 60)))
     pairs.append((b, a))
 
-with open("/root/repo/src/test/resources/string_metrics_golden.csv", "w", newline="") as f:
+OUT = os.path.join(os.path.dirname(os.path.abspath(__file__)), os.pardir,
+                   "src", "test", "resources", "string_metrics_golden.csv")
+with open(OUT, "w", newline="") as f:
     w = csv.writer(f)
-    w.writerow(["a", "b", "partial_ratio", "jaccard_char_distance", "difflib_ratio"])
+    w.writerow(["a", "b", "jaccard_char_distance"])
     for a, b in pairs:
-        w.writerow([a, b, partial_ratio(a, b), repr(jaccard_char(a, b)),
-                    repr(difflib.SequenceMatcher(None, a, b).ratio())])
+        w.writerow([a, b, repr(jaccard_char(a, b))])
 print("wrote", len(pairs), "pairs")
