@@ -14,8 +14,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * labelled with its action name. `Graft.materialize` is an execution of its
   * own (`localCheckpoint`), so q12 and q17 print one plan per checkpoint,
   * then the final write (`overwrite`), the later ones reading the
-  * checkpoints as `Scan ExistingRDD`; `Graft.widen` asks its input for a
-  * partition count, an execution named `rdd`. Used to verify
+  * checkpoints as `Scan ExistingRDD`. Used to verify
   * pushdown / broadcast / WindowGroupLimit / codegen spans and per-stage row
   * counts after every change. Sized like `Verify` (`SPARK_GRAFT_CPUS`).
   *

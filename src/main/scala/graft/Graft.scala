@@ -37,21 +37,6 @@ object Graft {
     * which is acceptable for short jobs, not for long runs. */
   def materialize(df: DataFrame): DataFrame = df.localCheckpoint()
 
-  /** Spread a CPU-heavy per-row stage across all cores when the upstream
-    * scan cannot: the harness fixtures are single-row-group parquet files,
-    * which plan as ONE scan task regardless of `maxPartitionBytes` or core
-    * count, serializing every downstream computation (guide §2 — make
-    * partitioning scale-adaptive, not a constant). No-op when the input
-    * already has at least default-parallelism partitions, so on a real
-    * cluster (where a big scan yields many splits) this never adds a
-    * shuffle. Row order is NOT preserved; callers must be order-insensitive
-    * (rank with deterministic tie-breaks, min/max/count, per-row kernels).
-    */
-  def widen(df: DataFrame): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < par) df.repartition(par) else df
-  }
-
   /** q17's LSH candidate generation: the distinct `(lo, hi)` pairs of
     * `idCol` values, lo < hi, that share the value of any one of
     * `bucketKeys` (one key per hash table or band).

@@ -67,25 +67,20 @@ object DedupQueries {
     * docs — go through `Graft.materialize`, so the expensive MinHash
     * pipeline and the corpus scan each run exactly ONCE (still fully
     * computed from parquet on every invocation). `graft.Explain` prints
-    * one execution each for candidates, candidate docs and the verify,
-    * after `widen`'s partition count of its input (`rdd`). */
+    * one execution each for candidates, candidate docs and the verify. */
   private def q17(s: SparkSession, dir: String): DataFrame = {
+      // The corpus is scanned exactly twice per invocation: once by the
+      // signature pipeline and once by the candidate semi-join below.
       val docsText = table(s, dir, "documents")
         .where(col("text").isNotNull)
         .select(col("doc_id"), col("text"))
-      // widen: the fixture is a single-row-group file, so without this the
-      // whole shingle+md5+minhash kernel runs in ONE task (no-op at scale,
-      // where the scan is already parallel — see Graft.widen). The corpus is
-      // scanned exactly twice per invocation: once by the signature pipeline
-      // and once by the candidate semi-join below.
-      val docsWide = graft.Graft.widen(docsText)
       // One codegen'd pass fuses tokenization, word-3-shingling and all K
       // signature slots (MinHashFromText kernel): each shingle is a byte
       // range of the raw text, so the pass allocates nothing per shingle.
       // Identical arithmetic slot-for-slot to the hex/conv formulation over
       // the shingle array (unit parity test), which the DuckDB oracle
       // replays, so the oracle matches bit-for-bit.
-      val sig = docsWide.select(col("doc_id"),
+      val sig = docsText.select(col("doc_id"),
         graft.expr.GraftFunctions.minhash_text(col("text")).as("sig"))
       // band keys: r consecutive signature slots joined into one string key
       val bandKeys = (0 until bands).map { j =>
@@ -94,9 +89,9 @@ object DedupQueries {
       }
       // candidates: bucket once on (band, key) and emit each bucket's
       // id-ordered pairs; the minhash pipeline runs once. Its plan shuffles
-      // three times: widen's round-robin, the (band, key) aggregation and
-      // the pair distinct. Same pair set as the oracle's banded self-join:
-      // within one bucket each doc_id appears once.
+      // twice: the (band, key) aggregation and the pair distinct. Same pair
+      // set as the oracle's banded self-join: within one bucket each doc_id
+      // appears once.
       val candPlan = graft.Graft.bucketPairs(sig, "doc_id", bandKeys).toDF("doc_a", "doc_b")
       // cand is referenced three times below (pair attach + both ends of
       // the id list); eagerly materializing it guarantees the MinHash
@@ -118,12 +113,11 @@ object DedupQueries {
       val candIds = cand
         .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
         .distinct()
-      val candDocsPlan = docsWide
+      val candDocsPlan = docsText
         .join(broadcast(candIds), Seq("doc_id"), "left_semi")
       // candDocs feeds both the text_a and text_b side; checkpointing it
-      // keeps the verify at exactly one corpus pass. Its plan shuffles the
-      // ids for the candIds distinct, and round-robins only the surviving
-      // docs: the optimizer pushes the semi join below widen's repartition.
+      // keeps the verify at exactly one corpus pass. Its plan shuffles only
+      // the ids, for the candIds distinct.
       val candDocs = graft.Graft.materialize(candDocsPlan)
       val withA = candDocs
         .join(broadcast(cand), col("doc_id") === col("doc_a"))

@@ -51,12 +51,12 @@ object RelationalQueries {
     // one genuinely growing dim — left as a shuffle join under AQE, which
     // picks broadcast when it fits).
     "q03_star_join_revenue" -> ((s, dir) => {
-      // NO widen here: the single-row-group fixture does serialize
+      // NO repartition here: the single-row-group fixture does serialize
       // scan+joins+agg into one task, but an r22 alternating A/B measured
       // the round-robin exchange of the 600k projected rows at a LOSS
-      // (0.77 s -> 1.16 s @32c) — decode dominates the stage and widen
+      // (0.77 s -> 1.16 s @32c) — decode dominates the stage and the exchange
       // cannot parallelize the scan itself, only the cheap join/agg tail
-      // (same lesson as q05's r21 widen regression).
+      // (same lesson as q05's r21 repartition regression).
       val li = table(s, dir, "lineitem")
       val o = table(s, dir, "orders")
       val c = table(s, dir, "customer")
@@ -90,8 +90,8 @@ object RelationalQueries {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(desc("o_orderdate"), asc("o_orderkey"))
-      // NO widen here (r21 added one; driver bench regressed 1.7x and the
-      // r22 in-JVM A/B confirms 0.77 s -> 0.36 s without): the window's own
+      // NO repartition here (r21 added one; driver bench regressed 1.7x and
+      // the r22 in-JVM A/B confirms 0.77 s -> 0.36 s without): the window's own
       // hash exchange on o_custkey already fans the sort kernel out to every
       // core, so a round-robin repartition upstream only ships the full rows
       // through one extra exchange to parallelize a trivial scan+project.
@@ -117,10 +117,7 @@ object RelationalQueries {
     "q07_events_json" -> ((s, dir) => {
       import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
       val propsSchema = StructType(Seq(StructField("k", IntegerType)))
-      // project to the two needed columns, then widen: the JSON parse is the
-      // per-row CPU kernel here and the fixture scan is one task (no-op at
-      // scale — see Graft.widen).
-      graft.Graft.widen(table(s, dir, "events").select(col("event_type"), col("props")))
+      table(s, dir, "events")
         .withColumn("k", from_json(col("props"), propsSchema).getField("k"))
         .groupBy(col("event_type"))
         .agg(round(avg(col("k")), 4).as("avg_k"), max(col("k")).as("max_k"),

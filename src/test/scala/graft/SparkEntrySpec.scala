@@ -54,11 +54,9 @@ class SparkEntrySpec extends AnyFunSuite {
 
   test("Explain prints the final plan of every execution a query performs") {
     val dir = writeFixture()
-    // q17's `Graft.widen` asks its input plan for a partition count: an
-    // execution named `rdd`
     val expected = Seq(
       "q12_label_propagation" -> Seq("localCheckpoint", "localCheckpoint", "overwrite"),
-      "q17_minhash_neardup" -> Seq("rdd", "localCheckpoint", "localCheckpoint", "overwrite"))
+      "q17_minhash_neardup" -> Seq("localCheckpoint", "localCheckpoint", "overwrite"))
     for ((n, actions) <- expected) {
       val plans = Explain.executedPlans(spark, dir, n)
       assert(plans.map(_._1) == actions, n)
@@ -67,14 +65,22 @@ class SparkEntrySpec extends AnyFunSuite {
         assert(!plan.contains("isFinalPlan=false"), s"$n $action: initial plan printed")
         assert(!plan.contains("AdaptiveSparkPlan") || plan.contains("isFinalPlan=true"),
           s"$n $action: no final plan")
+        // q17 reads its scan directly: nothing round-robins the documents
+        assert(n != "q17_minhash_neardup" || !plan.contains("RoundRobinPartitioning"),
+          s"$n $action: round-robin exchange")
       }
-      val runs = plans.dropWhile(_._1 == "rdd").map(_._2)
+      val runs = plans.map(_._2)
       assert(runs.head.contains("isFinalPlan=true"), s"$n: first checkpoint not final")
       assert(runs.head.contains("Scan parquet"), s"$n: first checkpoint should scan the input")
       assert(!runs.head.contains("Scan ExistingRDD"), s"$n: first checkpoint reads a checkpoint")
       for (plan <- runs.tail)
         assert(plan.contains("Scan ExistingRDD"), s"$n: later plans should read a checkpoint")
     }
+    // q10 scores each document against the constant seeds in one map-only stage
+    val q10 = Explain.executedPlans(spark, dir, "q10_seed_label_fuzzy")
+    assert(q10.map(_._1) == Seq("overwrite"), q10.toString)
+    for (op <- Seq("Exchange", "Join", "CartesianProduct"))
+      assert(!q10.head._2.contains(op), s"q10 plan holds $op:\n${q10.head._2}")
     val missing = Explain.executedPlans(spark, s"$dir/absent", "q17_minhash_neardup")
     assert(missing.size == 1 && missing.head._1 == "failed", missing.toString)
   }
