@@ -9,8 +9,13 @@ import org.apache.spark.sql.SparkSession
   * footer/file-listing caches shared across queries) and HashMap iteration
   * order shuffled which query paid them — q01 swung 2.3 s vs 0.63 s on an
   * identical binary. Warming the whole suite first pays those costs outside
-  * every timing window. A failed query is reported with time = -1.0 so a
-  * crash can never masquerade as a fast run; the exception goes to stderr.
+  * every timing window. At sf0.1 the warm-up compiles the suite's 202
+  * generated classes, and the session's codegen cache (`Graft.session`)
+  * keeps them all, so no timed run compiles. Under Spark's default cache of
+  * 100 classes the first timed run of each query recompiled 199 of them,
+  * and q12 recompiled 21-22 in each later run. A failed query is reported
+  * with time = -1.0 so a crash can never masquerade as a fast run; the
+  * exception goes to stderr.
   */
 object Bench {
   def main(args: Array[String]): Unit = {

@@ -15,8 +15,14 @@ import org.apache.spark.sql.functions._
 object Graft {
 
   /** The engine's session: `master`, `shufflePartitions` shuffle
-    * partitions, UTC session time zone, UI off, graft functions registered.
-    * Every other conf stays at Spark's default. */
+    * partitions, UTC session time zone, UI off, a generated-code cache of
+    * 1,000 classes, graft functions registered. Every other conf stays at
+    * Spark's default.
+    *
+    * The cache size is a static conf: Spark builds `CodeGenerator`'s cache
+    * once per JVM, at its first compile. It holds wherever this method
+    * builds the JVM's first session, which every main, perfbench and the
+    * test session do. */
   def session(master: String, shufflePartitions: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
@@ -24,6 +30,12 @@ object Graft {
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // perfbench's three workloads need 223 distinct generated classes, a
+      // label_spread pass 115 (q12 82); Spark's default of 100 recompiled
+      // 71-77 per label_spread pass. Guava splits the maximum over 4
+      // segments and evicts per segment (relational's 82 classes recompiled
+      // 18-22 per pass in some query orders), so leave about 4x headroom.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.expr.GraftFunctions.registerAll(spark)

@@ -7,9 +7,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * `editDistance` is q10's seed edit distance: the Levenshtein distance in
   * chars, equal to Spark's `levenshtein` (`UTF8String.levenshteinDistance`)
-  * for every input, computed bit-parallel (Myers, J. ACM 1999, in Hyyrö's
-  * edit-distance form, 2001) when both sides are ASCII and the shorter one
-  * has at most 64 chars.
+  * for every valid UTF-8 input, computed bit-parallel (Myers, J. ACM 1999,
+  * in Hyyrö's edit-distance form, 2001) when both sides are ASCII and the
+  * shorter one has at most 64 chars. Invalid UTF-8 is measured after
+  * `makeValid`: Spark's DP reads bytes past the end of a string that ends
+  * inside a multi-byte char.
   *
   * `jaccardCharDistance` reproduces nltk's `jaccard_distance` over character
   * sets (/root/reference/src/Label_matching.py:45-46 — char-level, NOT
@@ -26,18 +28,18 @@ object StringMetrics {
   }
 
   /** Levenshtein distance between `a` and `b` in chars, equal to
-    * `a.levenshteinDistance(b)`. When both strings are ASCII and the shorter
-    * one (the pattern, m chars) has at most 64, one 64-bit step per char of
-    * the other side tracks the DP column's vertical deltas, and `score` the
-    * last row. Any other input goes to Spark's DP: no workload sends
-    * non-ASCII text here. */
+    * `a.makeValid().levenshteinDistance(b.makeValid())`. When both strings
+    * are ASCII and the shorter one (the pattern, m chars) has at most 64,
+    * one 64-bit step per char of the other side tracks the DP column's
+    * vertical deltas, and `score` the last row. Any other input goes to
+    * Spark's DP: no workload sends non-ASCII text here. */
   def editDistance(a: UTF8String, b: UTF8String): Int = {
     val swap = a.numBytes > b.numBytes
     val p = if (swap) b else a
     val t = if (swap) a else b
     val m = p.numBytes
-    if (m == 0) return t.numChars
-    if (m > 64) return a.levenshteinDistance(b)
+    if (m == 0) return t.makeValid().numChars
+    if (m > 64) return sparkDistance(a, b)
 
     val masks = asciiMasks.get()
     val pBase = p.getBaseObject
@@ -46,7 +48,7 @@ object StringMetrics {
     try {
       while (i < m) {
         val c = Platform.getByte(pBase, pOff + i)
-        if (c < 0) return a.levenshteinDistance(b)
+        if (c < 0) return sparkDistance(a, b)
         masks(c) |= 1L << i
         i += 1
       }
@@ -60,7 +62,7 @@ object StringMetrics {
       i = 0
       while (i < n) {
         val c = Platform.getByte(tBase, tOff + i)
-        if (c < 0) return a.levenshteinDistance(b)
+        if (c < 0) return sparkDistance(a, b)
         val eq = masks(c)
         val xv = eq | mv
         val xh = (((eq & pv) + pv) ^ pv) | eq
@@ -85,6 +87,10 @@ object StringMetrics {
       }
     }
   }
+
+  /** Spark's DP over valid UTF-8. `makeValid` returns a valid string itself. */
+  private def sparkDistance(a: UTF8String, b: UTF8String): Int =
+    a.makeValid().levenshteinDistance(b.makeValid())
 
   /** nltk jaccard_distance over char sets: 1 - |A∩B|/|A∪B|; 0.0 when both
     * empty (identical empty sets; nltk raises — callers never hit it). */

@@ -1,12 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, LogicalRDD}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.graph.LabelSpreading
 
 /** The query inventory, the sessions it runs on, the checkpoints that
-  * `Graft.materialize` puts into q12 and q17, and the plans `Explain` prints. */
+  * `Graft.materialize` puts into q12 and q17, the plans `Explain` prints,
+  * and the generated code a session keeps across runs. */
 class SparkEntrySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -95,5 +99,31 @@ class SparkEntrySpec extends AnyFunSuite {
         s"$n rows differ on a foreign session")
     assert(spark.catalog.functionExists("dot_product"))
     assert(!foreign.catalog.functionExists("dot_product"), "queries registered SQL names")
+  }
+
+  /** q12's composition over the LSH k-NN graph (q12's seeds and
+    * hyperparameters), as perfbench's `approx_spread` builds it. */
+  private def approxSpread(s: SparkSession, dir: String): DataFrame = {
+    val e = Graft.table(s, dir, "embeddings")
+    val revealed = col("vec_id") % 5 === 0
+    val y = e.select(col("vec_id"),
+      when(revealed && col("label") === 0, 1.0).otherwise(0.0).as("y1"),
+      when(revealed && col("label") =!= 0, 1.0).otherwise(0.0).as("y0"))
+    val edges = LabelSpreading.normalizedEdges(
+      LabelSpreading.knnEdgesApprox(e, "vec_id", "embedding", 6))
+    LabelSpreading.thresholdLabels(LabelSpreading.spread(edges, y, "vec_id", 0.01, 5), "vec_id", 0.7)
+  }
+
+  test("a second run of the label-spreading and dedup queries compiles no code") {
+    // their working set is over Spark's default codegen cache of 100 classes
+    val dir = writeFixture()
+    val queries = Seq(SparkEntry.queries("q12_label_propagation"), SparkEntry.queries("q11_cosine_topk"),
+      approxSpread _, SparkEntry.queries("q17_minhash_neardup"))
+    def run(): Unit = queries.foreach(_(spark, dir).write.format("noop").mode("overwrite").save())
+    run()
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    run()
+    assert(compiles.getCount == before, s"${compiles.getCount - before} classes compiled again")
   }
 }

@@ -104,8 +104,8 @@ class StringMetricsSpec extends AnyFunSuite {
     swap <- Gen.prob(0.5)
   } yield if (swap) (b, a) else (a, b)
   /** Random bytes, some ending in a truncated 2-, 3- or 4-byte sequence.
-    * The string is a view that stops before 3 more random bytes, so the
-    * bytes Spark's DP reads past its end are the same on every call. */
+    * The string is a view that stops before 3 more random bytes, which
+    * Spark's DP reads past its end unless the string is made valid first. */
   private val bytes: Gen[UTF8String] = for {
     body <- Gen.chooseNum(0, 24).flatMap(Gen.listOfN(_, Gen.choose(Byte.MinValue, Byte.MaxValue)))
     tail <- Gen.oneOf(Seq.empty[Int], Seq(0xC3), Seq(0xE6), Seq(0xE6, 0x97), Seq(0xF0),
@@ -133,7 +133,7 @@ class StringMetricsSpec extends AnyFunSuite {
     def hex(s: UTF8String): String = s.getBytes.map(b => f"${b & 0xFF}%02x").mkString(" ")
     for ((name, pairs) <- cases) {
       val prop = Prop.forAllNoShrink(pairs) { case (a, b) =>
-        val want = a.levenshteinDistance(b)
+        val want = a.makeValid().levenshteinDistance(b.makeValid())
         val (ab, ba) = (StringMetrics.editDistance(a, b), StringMetrics.editDistance(b, a))
         Prop(ab == want && ba == want) :|
           s"[${hex(a)}] vs [${hex(b)}]: edit_distance $ab / $ba, levenshtein $want"
@@ -141,5 +141,15 @@ class StringMetricsSpec extends AnyFunSuite {
       val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(2000), prop)
       assert(res.passed, s"$name: ${org.scalacheck.util.Pretty.pretty(res)}")
     }
+  }
+
+  test("edit_distance does not read past a string that ends inside a multi-byte char") {
+    // the 1-byte view [e6] of '日' (e6 97 a5) and of [e6 00 00]: Spark's DP
+    // read the bytes after the view and gave 0 and 1
+    val seed = UTF8String.fromString("日")
+    val d = Seq(Array(0xE6, 0x97, 0xA5), Array(0xE6, 0x00, 0x00)).map { buf =>
+      StringMetrics.editDistance(UTF8String.fromBytes(buf.map(_.toByte), 0, 1), seed)
+    }
+    assert(d == Seq(1, 1), d)
   }
 }
