@@ -3,7 +3,7 @@ package graft
 import scala.collection.mutable
 import scala.util.Try
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -14,7 +14,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * labelled with its action name. `Graft.materialize` is an execution of its
   * own (`localCheckpoint`), so q12 and q17 print one plan per checkpoint,
   * then the final write (`overwrite`), the later ones reading the
-  * checkpoints as `Scan ExistingRDD`. Used to verify
+  * checkpoints as `Scan ExistingRDD`; q12's spread iterates its small graph
+  * in the driver, so there the second execution is the edges' `collect` and
+  * the write reads a `LocalTableScan`. Used to verify
   * pushdown / broadcast / WindowGroupLimit / codegen spans and per-stage row
   * counts after every change. Sized like `Verify` (`SPARK_GRAFT_CPUS`).
   *
@@ -38,7 +40,11 @@ object Explain {
   /** (action name, formatted plan) of every execution that sinking query
     * `name` on `sfDir` to `noop` performs, in order. A run that throws ends
     * the list with ("failed", its message). */
-  def executedPlans(spark: SparkSession, sfDir: String, name: String): Seq[(String, String)] = {
+  def executedPlans(spark: SparkSession, sfDir: String, name: String): Seq[(String, String)] =
+    executedPlans(spark, name)(SparkEntry.queries(name)(spark, sfDir))
+
+  /** The same for sinking `query`, named `name` in a failure. */
+  def executedPlans(spark: SparkSession, name: String)(query: => DataFrame): Seq[(String, String)] = {
     val plans = mutable.ArrayBuffer.empty[(String, String)]
     val listener = new QueryExecutionListener {
       def onSuccess(action: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -48,7 +54,7 @@ object Explain {
     // events of earlier runs must not reach this listener
     Bridge.drainListenerBus(spark.sparkContext)
     spark.listenerManager.register(listener)
-    val failure = Try(SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save())
+    val failure = Try(query.write.format("noop").mode("overwrite").save())
       .failed.toOption.map(e => "failed" -> s"$name failed: ${e.getMessage}")
     Bridge.drainListenerBus(spark.sparkContext)
     spark.listenerManager.unregister(listener)

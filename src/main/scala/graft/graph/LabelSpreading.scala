@@ -1,8 +1,11 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 /** Label spreading over a k-NN similarity graph — the reference's namesake
@@ -43,10 +46,13 @@ import org.apache.spark.sql.types._
   * Scale path (100 TB): the exact k-NN build is the O(N^2) correctness
   * oracle; `knnEdgesApprox` is the LSH-bucketed scale path (same output
   * schema, scores only rows that share a bucket) — the spread itself is
-  * linear in edges per iteration (one shuffle on dst, one on src). The
-  * seeded edge table is eagerly materialized so the iterated plan reuses
-  * one materialization instead of recomputing the N^2 scan per iteration,
-  * and so the logical plan the optimizer sees stays iteration-sized.
+  * linear in edges per iteration. The seeded edge table is eagerly
+  * materialized, and its measured bytes pick the iteration's home: a table
+  * within `LocalMaxBytes` (graphs of thousands of nodes, like the
+  * reference's per-category fits) is collected once and iterated in driver
+  * arrays, with no job per iteration; a larger one iterates as distributed
+  * joins over the checkpoint (one shuffle on dst, one on src), so the
+  * logical plan the optimizer sees stays iteration-sized.
   */
 object LabelSpreading {
 
@@ -276,16 +282,24 @@ object LabelSpreading {
     *
     * @param sEdges normalized edges (src, dst, s)
     * @param y      clamped seeds (id, y1, y0): 1.0/0.0 one-hot for labelled
-    *               rows, 0.0/0.0 for unlabelled; must contain every id that
-    *               appears in sEdges (the seed term rides the edge table)
+    *               rows, 0.0/0.0 for unlabelled; its ids must be unique (a
+    *               duplicate multiplies its messages) and must include every
+    *               id that appears in sEdges (the seed term rides the edge
+    *               table)
     * @return (id, f1, f0) raw (unrounded) label distributions, one row per
-    *         id of `y`; an id without edges keeps f = (1 - alpha) * y
+    *         non-NULL id of `y`; an id without edges keeps
+    *         f = (1 - alpha) * y
     *
-    * The seeded edge table and the result are materialized with
-    * `Graft.materialize`, so the 5-iteration plan reads the edges from a
-    * checkpoint instead of embedding the O(N^2) k-NN subtree once per
-    * iteration. For q12, `graft.Explain` prints three executions: k-NN
-    * through the seeded edges, the iterations, and the thresholding.
+    * The seeded edge table is materialized with `Graft.materialize`, so the
+    * iterations read the edges from a checkpoint instead of embedding the
+    * O(N^2) k-NN subtree once per iteration. When `iteratesLocally` holds
+    * for the checkpoint (its measured bytes within `LocalMaxBytes`), the
+    * edges are collected once and the iterations run in driver arrays
+    * (`iterateLocal`), returning a local relation; otherwise they run as
+    * distributed joins (`iterate`) whose result is materialized too. For
+    * q12, `graft.Explain` prints the seeded-edge checkpoint, then the edge
+    * `collect` (or, for a larger graph, the iteration checkpoint), then the
+    * thresholding.
     */
   def spread(sEdges: DataFrame, y: DataFrame, idCol: String,
              alpha: Double, iters: Int): DataFrame = {
@@ -301,12 +315,34 @@ object LabelSpreading {
     // still computed from parquet on every invocation — the
     // materializations happen inside this call.
     val e2 = graft.Graft.materialize(seededEdges(sEdges, y, idCol))
-    val out = graft.Graft.materialize(iterate(e2, y, idCol, alpha, iters))
-    // out is materialized, so the invariant's blocks are dead weight now —
-    // free them eagerly instead of waiting for a GC-driven ContextCleaner.
-    org.apache.spark.sql.graftbridge.Bridge.dropCheckpointBlocks(e2)
+    val out =
+      if (iteratesLocally(e2.schema("src").dataType, Bridge.checkpointBytes(e2)))
+        iterateLocal(e2, idCol, alpha, iters)
+      else graft.Graft.materialize(iterate(e2, y, idCol, alpha, iters))
+    // out is materialized or local, so the invariant's blocks are dead
+    // weight now — free them eagerly instead of waiting for a GC-driven
+    // ContextCleaner.
+    Bridge.dropCheckpointBlocks(e2)
     out
   }
+
+  /** The largest seeded edge table, in block-manager bytes, that `spread`
+    * iterates in driver memory: about 150k edges at the ~107 bytes an edge
+    * measures (perfbench's 16.7k-edge graphs measure 1.8 MB). Collected and
+    * boxed, a table takes several times its block bytes, which at this
+    * bound stays far under `spark.driver.maxResultSize`'s 1 GB default. */
+  private[graph] val LocalMaxBytes: Long = 16L << 20
+
+  /** Whether `spread` iterates in driver memory: the checkpoint's measured
+    * bytes (None when it is no stored RDD) are within `LocalMaxBytes`, and
+    * its ids are of a type whose collected values compare and hash by value
+    * as the join's keys do (`iterateLocal` numbers them in sorted order). */
+  private[graph] def iteratesLocally(idType: DataType, bytes: Option[Long]): Boolean =
+    bytes.exists(_ <= LocalMaxBytes) && (idType match {
+      case ByteType | ShortType | IntegerType | LongType | StringType | DateType => true
+      case _: DecimalType => true
+      case _ => false
+    })
 
   /** Edge invariant with the seed term attached: (src, dst, s, y1, y0)
     * where (y1, y0) are the SOURCE node's clamped seeds. Computed once per
@@ -316,7 +352,7 @@ object LabelSpreading {
     * A zero-weight self-loop per id of `y` makes every id a src, so a node
     * with no edge (e.g. an LSH outlier) still gets its row; the loop adds an
     * exact 0.0 to every sum, so no other value moves. */
-  private def seededEdges(sEdges: DataFrame, y: DataFrame, idCol: String): DataFrame =
+  private[graph] def seededEdges(sEdges: DataFrame, y: DataFrame, idCol: String): DataFrame =
     sEdges.join(y, sEdges("src") === y(idCol))
       .select(col("src"), col("dst"), col("s"), col("y1"), col("y0"))
       .unionByName(y.select(col(idCol).as("src"), col(idCol).as("dst"),
@@ -333,7 +369,7 @@ object LabelSpreading {
     * AQE), so agreement with the re-join formulation is to ~1 ulp, which the
     * 6 dp output rounding absorbs — see LabelSpreadingSpec's parity test and
     * the oracle hash. */
-  private def iterate(e2: DataFrame, y: DataFrame, idCol: String,
+  private[graph] def iterate(e2: DataFrame, y: DataFrame, idCol: String,
                       alpha: Double, iters: Int): DataFrame = {
     var f = y.select(col(idCol), col("y1").as("f1"), col("y0").as("f0"))
     for (_ <- 1 to iters) {
@@ -345,6 +381,37 @@ object LabelSpreading {
         .withColumnRenamed("src", idCol)
     }
     f
+  }
+
+  /** `iterate` in driver arrays over the collected seeded edges: the same
+    * update, the same fixed `iters`, and one row per id of `y` (the
+    * non-NULL srcs; a NULL id gets no row and a dst that is no src sends no
+    * message, as the join drops both). Ids are numbered in ascending order
+    * (`iteratesLocally` admits only id types that sort and compare by
+    * value), and each source sums its messages in ascending dst order, so
+    * the result does not depend on the order in which partitions arrive. Ids
+    * keep the edge table's type, which is `y`'s when the edges share it. */
+  private[graph] def iterateLocal(e2: DataFrame, idCol: String, alpha: Double, iters: Int): DataFrame = {
+    val rows = e2.collect().filterNot(_.isNullAt(0))
+    val ids = rows.map(_.get(0)).distinct
+      .sortWith((a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b) < 0)
+    val index = ids.zipWithIndex.toMap
+    val (y1, y0) = (new Array[Double](ids.length), new Array[Double](ids.length))
+    val edges = rows.flatMap { r =>
+      val i = index(r.get(0))
+      y1(i) = r.getDouble(3); y0(i) = r.getDouble(4)
+      index.get(r.get(1)).map(j => (i, j, r.getDouble(2)))
+    }.sortBy(e => (e._1, e._2))
+    var (f1, f0) = (y1, y0)
+    for (_ <- 1 to iters) {
+      val (m1, m0) = (new Array[Double](ids.length), new Array[Double](ids.length))
+      for ((i, j, s) <- edges) { m1(i) += s * f1(j); m0(i) += s * f0(j) }
+      f1 = Array.tabulate(ids.length)(i => alpha * m1(i) + (1.0 - alpha) * y1(i))
+      f0 = Array.tabulate(ids.length)(i => alpha * m0(i) + (1.0 - alpha) * y0(i))
+    }
+    val schema = StructType(Seq(e2.schema("src").copy(name = idCol),
+      StructField("f1", DoubleType), StructField("f0", DoubleType)))
+    e2.sparkSession.createDataFrame(ids.indices.map(i => Row(ids(i), f1(i), f0(i))).asJava, schema)
   }
 
   /** Threshold the normalized posterior (labelling_pipeline.py:460-466):

@@ -1,9 +1,11 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.SparkContext
+import org.apache.spark.{SparkContext, SparkEnv}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.RDDBlockId
 import org.apache.spark.sql.types.{AbstractDataType, DataType, TypeCollection}
 
 /** Minimal access bridge: a few Catalyst APIs graft needs (Column <->
@@ -28,8 +30,24 @@ object Bridge {
     * that are not a checkpoint scan. */
   def dropCheckpointBlocks(df: org.apache.spark.sql.DataFrame): Unit =
     df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking = false)
+      case l: LogicalRDD => l.rdd.unpersist(blocking = false)
       case _ => ()
+    }
+
+  /** The bytes a `localCheckpoint()`ed DataFrame's blocks hold, memory plus
+    * disk, summed over its partitions as the block manager master reports
+    * them. The read is synchronous, unlike `SparkContext.getRDDStorageInfo`,
+    * whose status store the listener bus fills later. None for a plan that
+    * is not a scan of a stored RDD. */
+  def checkpointBytes(df: org.apache.spark.sql.DataFrame): Option[Long] =
+    df.queryExecution.analyzed match {
+      case l: LogicalRDD if l.rdd.getStorageLevel.isValid =>
+        Some(l.rdd.partitions.indices.map { p =>
+          SparkEnv.get.blockManager.master
+            .getBlockStatus(RDDBlockId(l.rdd.id, p), askStorageEndpoints = true)
+            .values.map(s => s.memSize + s.diskSize).sum
+        }.sum)
+      case _ => None
     }
 
   /** Block until every event posted so far has reached its listeners, so a

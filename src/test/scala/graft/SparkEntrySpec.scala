@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.{FileSourceScanExec, LogicalRDD}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -49,37 +50,47 @@ class SparkEntrySpec extends AnyFunSuite {
 
   test("materialize: checkpoints by default") {
     val dir = writeFixture()
-    for (n <- Seq("q12_label_propagation", "q17_minhash_neardup")) {
-      val df = SparkEntry.queries(n)(spark, dir)
-      assert(readsCheckpoint(df), s"$n should read checkpointed data")
-      assert(!scansFiles(df), s"$n should not rescan its input")
-    }
+    val q17 = SparkEntry.queries("q17_minhash_neardup")(spark, dir)
+    assert(readsCheckpoint(q17), "q17 should read checkpointed data")
+    assert(!scansFiles(q17), "q17 should not rescan its input")
+    // q12's small graph iterates in the driver: the thresholding reads
+    // spread's local result, neither a checkpoint nor the files (the
+    // distributed path's shape is LabelSpreadingSpec's)
+    val q12 = SparkEntry.queries("q12_label_propagation")(spark, dir)
+    assert(q12.queryExecution.optimizedPlan.exists(_.isInstanceOf[LocalRelation]))
+    assert(!readsCheckpoint(q12) && !scansFiles(q12))
   }
 
   test("Explain prints the final plan of every execution a query performs") {
     val dir = writeFixture()
-    val expected = Seq(
-      "q12_label_propagation" -> Seq("localCheckpoint", "localCheckpoint", "overwrite"),
-      "q17_minhash_neardup" -> Seq("localCheckpoint", "localCheckpoint", "overwrite"))
-    for ((n, actions) <- expected) {
-      val plans = Explain.executedPlans(spark, dir, n)
-      assert(plans.map(_._1) == actions, n)
-      // a plan without an exchange (q12's thresholding) is not adaptive
-      for ((action, plan) <- plans) {
-        assert(!plan.contains("isFinalPlan=false"), s"$n $action: initial plan printed")
-        assert(!plan.contains("AdaptiveSparkPlan") || plan.contains("isFinalPlan=true"),
-          s"$n $action: no final plan")
-        // q17 reads its scan directly: nothing round-robins the documents
-        assert(n != "q17_minhash_neardup" || !plan.contains("RoundRobinPartitioning"),
-          s"$n $action: round-robin exchange")
-      }
-      val runs = plans.map(_._2)
-      assert(runs.head.contains("isFinalPlan=true"), s"$n: first checkpoint not final")
-      assert(runs.head.contains("Scan parquet"), s"$n: first checkpoint should scan the input")
-      assert(!runs.head.contains("Scan ExistingRDD"), s"$n: first checkpoint reads a checkpoint")
-      for (plan <- runs.tail)
-        assert(plan.contains("Scan ExistingRDD"), s"$n: later plans should read a checkpoint")
+    val q17 = Explain.executedPlans(spark, dir, "q17_minhash_neardup")
+    assert(q17.map(_._1) == Seq("localCheckpoint", "localCheckpoint", "overwrite"), q17.toString)
+    // q12's spread collects its one checkpoint and iterates in the driver;
+    // the thresholding reads the local result (the distributed path's
+    // executions are LabelSpreadingSpec's)
+    val q12 = Explain.executedPlans(spark, dir, "q12_label_propagation")
+    assert(q12.map(_._1) == Seq("localCheckpoint", "collect", "overwrite"), q12.toString)
+    // a plan without an exchange is not adaptive
+    for ((action, plan) <- q17 ++ q12) {
+      assert(!plan.contains("isFinalPlan=false"), s"$action: initial plan printed")
+      assert(!plan.contains("AdaptiveSparkPlan") || plan.contains("isFinalPlan=true"),
+        s"$action: no final plan")
     }
+    for ((action, plan) <- q17) {
+      // q17 reads its scan directly: nothing round-robins the documents
+      assert(!plan.contains("RoundRobinPartitioning"), s"q17 $action: round-robin exchange")
+    }
+    assert(q17.head._2.contains("isFinalPlan=true"), "q17: first checkpoint not final")
+    assert(q17.head._2.contains("Scan parquet"), "q17: first checkpoint should scan the input")
+    assert(!q17.head._2.contains("Scan ExistingRDD"), "q17: first checkpoint reads a checkpoint")
+    for ((_, plan) <- q17.tail)
+      assert(plan.contains("Scan ExistingRDD"), "q17: later plans should read a checkpoint")
+    val Seq(edges, collect, sink) = q12.map(_._2)
+    assert(edges.contains("isFinalPlan=true"), edges)
+    assert(edges.contains("Scan parquet") && !edges.contains("Scan ExistingRDD"), edges)
+    assert(collect.contains("Scan ExistingRDD") && !collect.contains("Scan parquet"), collect)
+    assert(sink.contains("LocalTableScan") && !sink.contains("Scan parquet") &&
+      !sink.contains("Scan ExistingRDD"), sink)
     // q10 scores each document against the constant seeds in one map-only stage
     val q10 = Explain.executedPlans(spark, dir, "q10_seed_label_fuzzy")
     assert(q10.map(_._1) == Seq("overwrite"), q10.toString)

@@ -1,7 +1,9 @@
 package graft.graph
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{FileSourceScanExec, LogicalRDD}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
@@ -29,6 +31,16 @@ class LabelSpreadingSpec extends AnyFunSuite {
       StructType(Seq(
         StructField("vec_id", LongType, nullable = false),
         StructField("embedding", ArrayType(FloatType, containsNull = false)))))
+  }
+
+  /** `spread`'s two iteration paths over one seeded-edge checkpoint, both
+    * evaluated: driver arrays, and distributed joins materialized as
+    * `spread` materializes them. */
+  private def paths(sEdges: DataFrame, y: DataFrame, idCol: String,
+                    alpha: Double, iters: Int): Seq[(String, DataFrame)] = {
+    val e2 = graft.Graft.materialize(LabelSpreading.seededEdges(sEdges, y, idCol))
+    Seq("local" -> LabelSpreading.iterateLocal(e2, idCol, alpha, iters),
+      "distributed" -> graft.Graft.materialize(LabelSpreading.iterate(e2, y, idCol, alpha, iters)))
   }
 
   test("knnEdges picks within-cluster neighbors") {
@@ -349,17 +361,18 @@ class LabelSpreadingSpec extends AnyFunSuite {
     }
 
     val want = oldShape(edges)
-    val got = LabelSpreading.spread(edges, y, "vec_id", alpha, iters)
-      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    assert(got.keySet == want.keySet)
     def close(a: Double, b: Double): Boolean =
       a == b || math.abs(a - b) <= 1e-12 * math.max(math.abs(a), math.abs(b))
-    for ((id, (f1, f0)) <- want) {
-      assert(close(got(id)._1, f1), s"f1 mismatch at $id: ${got(id)._1} != $f1")
-      assert(close(got(id)._2, f0), s"f0 mismatch at $id: ${got(id)._2} != $f0")
-      // and the property the oracle hash actually depends on:
-      assert(math.round(got(id)._1 * 1e6) == math.round(f1 * 1e6))
-      assert(math.round(got(id)._2 * 1e6) == math.round(f0 * 1e6))
+    for ((path, f) <- paths(edges, y, "vec_id", alpha, iters)) {
+      val got = f.collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+      assert(got.keySet == want.keySet, path)
+      for ((id, (f1, f0)) <- want) {
+        assert(close(got(id)._1, f1), s"$path: f1 mismatch at $id: ${got(id)._1} != $f1")
+        assert(close(got(id)._2, f0), s"$path: f0 mismatch at $id: ${got(id)._2} != $f0")
+        // and the property the oracle hash actually depends on:
+        assert(math.round(got(id)._1 * 1e6) == math.round(f1 * 1e6), path)
+        assert(math.round(got(id)._2 * 1e6) == math.round(f0 * 1e6), path)
+      }
     }
   }
 
@@ -409,8 +422,6 @@ class LabelSpreadingSpec extends AnyFunSuite {
         pairs.map { case (a, b) => (a.toLong, b.toLong, 1.0) }.toDF("src", "dst", "sim"))
       val s = sEdges.collect().map(r => (r.getLong(0).toInt, r.getLong(1).toInt, r.getDouble(2)))
       val y = ys.zipWithIndex.map { case ((y1, y0), i) => (i.toLong, y1, y0) }.toDF("vec_id", "y1", "y0")
-      val got = LabelSpreading.spread(sEdges, y, "vec_id", alpha, iters)
-        .collect().map(r => (r.getLong(0).toInt, r.getDouble(1), r.getDouble(2))).toSeq
       var f = ys.toIndexedSeq
       for (_ <- 1 to iters) {
         val msg = s.groupBy(_._1).map { case (src, es) =>
@@ -422,12 +433,17 @@ class LabelSpreadingSpec extends AnyFunSuite {
           (alpha * m1 + (1 - alpha) * ys(i)._1, alpha * m0 + (1 - alpha) * ys(i)._2)
         }
       }
-      val off = got.filterNot { case (i, f1, f0) =>
-        f1 >= 0 && f0 >= 0 && math.abs(f1 - f(i)._1) <= 1e-12 && math.abs(f0 - f(i)._2) <= 1e-12
+      // every case on both paths
+      val bad = paths(sEdges, y, "vec_id", alpha, iters).flatMap { case (path, df) =>
+        val got = df.collect().map(r => (r.getLong(0).toInt, r.getDouble(1), r.getDouble(2))).toSeq
+        val off = got.filterNot { case (i, f1, f0) =>
+          f1 >= 0 && f0 >= 0 && math.abs(f1 - f(i)._1) <= 1e-12 && math.abs(f0 - f(i)._2) <= 1e-12
+        }
+        if (got.map(_._1).sorted == ys.indices && off.isEmpty) None
+        else Some(s"$path: ids ${got.map(_._1).sorted}, off the dense reference $off")
       }
-      Prop(got.map(_._1).sorted == ys.indices && off.isEmpty) :|
-        s"n=${ys.size} edges=$pairs alpha=$alpha iters=$iters: ids ${got.map(_._1).sorted}, " +
-          s"off the dense reference $off (want $f)"
+      Prop(bad.isEmpty) :|
+        s"n=${ys.size} edges=$pairs alpha=$alpha iters=$iters: ${bad.mkString("; ")} (want $f)"
     }
     val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(30), prop)
     assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
@@ -442,14 +458,124 @@ class LabelSpreadingSpec extends AnyFunSuite {
     val y = Seq((0L, 1.0, 0.0), (1L, 0.0, 1.0), (2L, 0.0, 0.0), (3L, 0.0, 0.0),
       (4L, 1.0, 0.0), (5L, 0.0, 0.0)).toDF("vec_id", "y1", "y0")
     val alpha = 0.01
-    val out = LabelSpreading.thresholdLabels(
-      LabelSpreading.spread(edges, y, "vec_id", alpha, iters = 5), "vec_id", 0.7)
-      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2), r.getInt(3))).toMap
-    assert(out.keySet == (0L to 5L).toSet)
-    // an isolated node keeps f = (1 - alpha) * y and its thresholded label
-    assert(out(4L) == ((0.99, 0.0, 1)))
-    assert(out(5L) == ((0.0, 0.0, -1)))
-    assert(out(2L)._3 == 1 && out(3L)._3 == 0)
+    for ((path, f) <- paths(edges, y, "vec_id", alpha, iters = 5)) {
+      val out = LabelSpreading.thresholdLabels(f, "vec_id", 0.7)
+        .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2), r.getInt(3))).toMap
+      assert(out.keySet == (0L to 5L).toSet, path)
+      // an isolated node keeps f = (1 - alpha) * y and its thresholded label
+      assert(out(4L) == ((0.99, 0.0, 1)), path)
+      assert(out(5L) == ((0.0, 0.0, -1)), path)
+      assert(out(2L)._3 == 1 && out(3L)._3 == 0, path)
+    }
+  }
+
+  test("spread on both paths: an empty y gives no rows, a NULL id gets none, ids keep their type") {
+    import spark.implicits._
+    val edges = LabelSpreading.normalizedEdges(
+      Seq((0L, 1L, 1.0), (1L, 0L, 1.0), (1L, 2L, 1.0)).toDF("src", "dst", "sim"))
+    val schema = StructType(Seq(StructField("vec_id", LongType), StructField("y1", DoubleType),
+      StructField("y0", DoubleType)))
+    def y(rows: Row*) = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    def bothPaths(seeds: DataFrame) = {
+      val Seq(local, distributed) = paths(edges, seeds, "vec_id", 0.5, 3).map { case (_, f) =>
+        val rows = f.collect().map(r => (Option(r.get(0)), r.getDouble(1), r.getDouble(2)))
+        (f.schema, rows.sortBy(_._1.toString).toSeq)
+      }
+      assert(local._1 == distributed._1)
+      assert(local._1.fieldNames.toSeq == Seq("vec_id", "f1", "f0") && local._1("vec_id").dataType == LongType)
+      assert(local._2.size == distributed._2.size)
+      for (((i, a1, a0), (j, b1, b0)) <- local._2.zip(distributed._2)) {
+        assert(i == j)
+        assert(math.abs(a1 - b1) <= 1e-15 && math.abs(a0 - b0) <= 1e-15, s"$i: ($a1, $a0) vs ($b1, $b0)")
+      }
+      local._2
+    }
+    assert(bothPaths(y()).isEmpty)
+    // node 2 is only a dst: it is in no row of y, so it sends no message
+    val withNull = bothPaths(y(Row(0L, 1.0, 0.0), Row(null, 0.0, 1.0), Row(1L, 0.0, 0.0), Row(3L, 0.0, 1.0)))
+    assert(withNull.map(_._1) == Seq(Some(0L), Some(1L), Some(3L)))
+    // node 3 has no edge: it keeps f = (1 - alpha) * y
+    assert(withNull.last == ((Some(3L), 0.0, 0.5)))
+  }
+
+  /** q12's composition over an embeddings parquet in `dir`, its spread
+    * iterated by `iterations` over the seeded-edge checkpoint. */
+  private def q12(dir: String)(iterations: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val e = graft.Graft.table(spark, dir, "embeddings")
+    val edges = LabelSpreading.normalizedEdges(LabelSpreading.knnEdges(e, "vec_id", "embedding", 6))
+    val y = e.select(col("vec_id"),
+      when(col("vec_id") % 5 === 0 && col("label") === 0, 1.0).otherwise(0.0).as("y1"),
+      when(col("vec_id") % 5 === 0 && col("label") =!= 0, 1.0).otherwise(0.0).as("y0"))
+    val e2 = graft.Graft.materialize(LabelSpreading.seededEdges(edges, y, "vec_id"))
+    LabelSpreading.thresholdLabels(iterations(e2, y), "vec_id", 0.7)
+  }
+
+  private def embeddingsDir(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_spread").toString
+    vectors.withColumn("label", (col("vec_id") / 4).cast("int")).write.parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
+  test("spread iterates in the driver within LocalMaxBytes, for ids that compare by value") {
+    import LabelSpreading.{LocalMaxBytes, iteratesLocally}
+    val dir = embeddingsDir()
+    // q12's seeded edges measure within the bound, so its spread collects
+    var measured = Option.empty[Long]
+    q12(dir) { (e2, _) =>
+      measured = Bridge.checkpointBytes(e2)
+      LabelSpreading.iterateLocal(e2, "vec_id", 0.01, 5)
+    }.collect()
+    assert(measured.exists(b => b > 0 && b <= LocalMaxBytes), measured)
+    assert(graft.Explain.executedPlans(spark, dir, "q12_label_propagation").map(_._1) ==
+      Seq("localCheckpoint", "collect", "overwrite"))
+    assert(Bridge.checkpointBytes(vectors).isEmpty)
+    for (t <- Seq(IntegerType, LongType, StringType, DateType, DecimalType(20, 0)))
+      assert(iteratesLocally(t, Some(LocalMaxBytes)), t)
+    assert(!iteratesLocally(LongType, Some(LocalMaxBytes + 1)) && !iteratesLocally(LongType, None))
+    // byte arrays compare by reference, collated strings by their collation
+    for (t <- Seq(BinaryType, StringType("UTF8_LCASE"), DoubleType, ArrayType(LongType)))
+      assert(!iteratesLocally(t, Some(1L)), t)
+    // so binary ids take the joins, and spread equals its long-id result
+    import spark.implicits._
+    val edges = LabelSpreading.normalizedEdges(
+      Seq((0L, 1L, 1.0), (1L, 0L, 1.0), (1L, 2L, 1.0)).toDF("src", "dst", "sim"))
+    val y = Seq((0L, 1.0, 0.0), (1L, 0.0, 0.0), (2L, 0.0, 1.0)).toDF("vec_id", "y1", "y0")
+    def bin(df: DataFrame, cols: String*) = df.select(df.columns.map(c =>
+      if (cols.contains(c)) col(c).cast("string").cast("binary").as(c) else col(c)): _*)
+    val longs = LabelSpreading.spread(edges, y, "vec_id", 0.5, 3)
+      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    val bins = LabelSpreading.spread(bin(edges, "src", "dst"), bin(y, "vec_id"), "vec_id", 0.5, 3)
+      .collect().map(r => new String(r.getAs[Array[Byte]](0), "UTF-8").toLong -> (r.getDouble(1), r.getDouble(2)))
+    assert(bins.toMap == longs && bins.length == 3)
+  }
+
+  test("the distributed path reads its checkpoints: q12 over iterate equals q12") {
+    val dir = embeddingsDir()
+    def distributed() = q12(dir) { (e2, y) =>
+      graft.Graft.materialize(LabelSpreading.iterate(e2, y, "vec_id", 0.01, 5))
+    }
+    val df = distributed()
+    assert(df.queryExecution.optimizedPlan.exists(_.isInstanceOf[LogicalRDD]),
+      "the thresholding should read the iteration checkpoint")
+    assert(!df.queryExecution.sparkPlan.exists(_.isInstanceOf[FileSourceScanExec]),
+      "the thresholding should not rescan the input")
+    val rows = df.collect().toSet
+    assert(rows.size == 12)
+    assert(rows == graft.SparkEntry.queries("q12_label_propagation")(spark, dir).collect().toSet)
+    val plans = graft.Explain.executedPlans(spark, "q12 over iterate")(distributed())
+    assert(plans.map(_._1) == Seq("localCheckpoint", "localCheckpoint", "overwrite"), plans.toString)
+    // a plan without an exchange (the thresholding) is not adaptive
+    for ((action, plan) <- plans) {
+      assert(!plan.contains("isFinalPlan=false"), s"$action: initial plan printed")
+      assert(!plan.contains("AdaptiveSparkPlan") || plan.contains("isFinalPlan=true"),
+        s"$action: no final plan")
+    }
+    val runs = plans.map(_._2)
+    assert(runs.head.contains("isFinalPlan=true"), "first checkpoint not final")
+    assert(runs.head.contains("Scan parquet"), "first checkpoint should scan the input")
+    assert(!runs.head.contains("Scan ExistingRDD"), "first checkpoint reads a checkpoint")
+    for (plan <- runs.tail)
+      assert(plan.contains("Scan ExistingRDD"), "later plans should read a checkpoint")
   }
 
   test("thresholdLabels demotes mixed posteriors to -1") {
